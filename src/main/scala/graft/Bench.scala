@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark main: runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints one JSON line with per-query seconds.
   *
@@ -354,31 +352,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // opt in to result-sealing: this long-lived multi-hundred-query
-      // session is exactly what the CacheOps hygiene exists for
-      // (library sessions default to lazy results — CacheOps scaladoc)
-      .config("spark.graft.seal.enabled", "true")
-      // Generated-class cache (static conf, default 100 entries): a
-      // 317-query suite generates thousands of codegen'd classes, so at
-      // the default size every query's classes are evicted long before
-      // its re-run — and an EVICTED class is recompiled as a FRESH
-      // class with cold JIT state, which is what made q203 run 2.6×
-      // slower in-suite than back-to-back with q183 (r14 regression:
-      // the two share their truth-pass subtree's generated code; with
-      // ~20 queries between them the shared classes were evicted and
-      // q203 paid janino + interpreter-tier execution again). Sized to
-      // hold the whole suite's classes; same knob a production cluster
-      // running a wide query mix should raise.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    // opt in to result-sealing: this long-lived multi-hundred-query
+    // session is exactly what the CacheOps hygiene exists for
+    // (library sessions default to lazy results — CacheOps scaladoc)
+    val spark = GraftSession.local(overrides = GraftSession.Sealed)
 
     // Box-speed probe: the bench box is co-tenanted and same-code full
     // runs have varied 225–298 s within hours (PLANS.md r12). A fixed

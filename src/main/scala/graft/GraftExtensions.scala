@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.expressions.{CosineSimilarity, HammingDistance, NfcNormalize}
@@ -10,18 +9,29 @@ import graft.expressions.{CosineSimilarity, HammingDistance, NfcNormalize}
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions in the SQL function registry so they are usable
   * from `spark.sql` text exactly like built-ins (including inside the
-  * dashboard-SQL surface).
+  * dashboard-SQL surface), and injects the two optimizer rules
+  * ([[graft.plans.PushTimestampConversionBounds]],
+  * [[graft.plans.LevenshteinLengthBound]]).
   *
-  * Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Activate with [[GraftSession.local]] (which installs it through
+  * the builder's `withExtensions`) or
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineSimilarityDesc)
-    ext.injectFunction(GraftExtensions.hammingDistanceDesc)
-    ext.injectFunction(GraftExtensions.nfcNormalizeDesc)
+    ext.injectFunction(GraftExtensions.function("cosine_similarity",
+        classOf[CosineSimilarity], "cosine_similarity(arrayA, arrayB)", 2) {
+      c => CosineSimilarity(c.head, c(1))
+    })
+    ext.injectFunction(GraftExtensions.function("hamming_distance",
+        classOf[HammingDistance], "hamming_distance(strA, strB)", 2) {
+      c => HammingDistance(c.head, c(1))
+    })
+    ext.injectFunction(GraftExtensions.function("nfc_normalize",
+        classOf[NfcNormalize], "nfc_normalize(str)", 1) {
+      c => NfcNormalize(c.head)
+    })
     ext.injectOptimizerRule(_ => graft.plans.PushTimestampConversionBounds)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinLengthBound)
   }
@@ -29,58 +39,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private[graft] val cosineSimilarityDesc
+  private def function(name: String, cls: Class[_], usage: String,
+      arity: Int)(build: Seq[Expression] => Expression)
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        "cosine_similarity"),
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "cosine_similarity(arrayA, arrayB) takes 2 arguments")
-        CosineSimilarity(children.head, children(1))
+        require(children.length == arity,
+          s"$usage takes $arity argument${if (arity == 1) "" else "s"}")
+        build(children)
       })
-
-  private[graft] val hammingDistanceDesc
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("hamming_distance"),
-      new ExpressionInfo(classOf[HammingDistance].getName,
-        "hamming_distance"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "hamming_distance(strA, strB) takes 2 arguments")
-        HammingDistance(children.head, children(1))
-      })
-
-  private[graft] val nfcNormalizeDesc
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName,
-        "nfc_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          "nfc_normalize(str) takes 1 argument")
-        NfcNormalize(children.head)
-      })
-
-  /** Register on an already-built session (tests, REPL): SQL functions
-    * plus the timestamp-conversion pushdown rule (idempotent). The rule
-    * goes through `experimental.extraOptimizations`, which run after
-    * the main optimizer — by then predicate pushdown has inlined
-    * Project aliases, so the conversion pattern sits in Filters
-    * directly above relations and the conjuncts this rule adds are
-    * collected into the scan during physical planning. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(cosineSimilarityDesc, hammingDistanceDesc, nfcNormalizeDesc)
-      .foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry
-          .registerFunction(id, info, builder)
-    }
-    Seq(graft.plans.PushTimestampConversionBounds,
-        graft.plans.LevenshteinLengthBound).foreach { rule =>
-      if (!spark.experimental.extraOptimizations.contains(rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
-    }
-  }
 }

@@ -1,30 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local(overrides = GraftSession.Sealed ++ Map(
       // micros (not INT96) so the dumped timestamps carry the same
       // logical type/resolution as the DuckDB oracle's output
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // opt in to result-sealing: the ~300-query dump is the long-lived
-      // session CacheOps' hygiene targets (library default is lazy)
-      .config("spark.graft.seal.enabled", "true")
-      // hold the whole suite's generated classes (default 100 entries
-      // evicts-and-recompiles constantly across 300+ queries — see
-      // Bench.scala for the measured r14 q203 regression this caused)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q70_dup_clusters — optional comma-separated
     // filter for local iteration (driver runs unfiltered); the oracle

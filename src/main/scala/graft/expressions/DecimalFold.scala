@@ -44,18 +44,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *     BigDecimal — long-max 9.2e18 unscaled is far below the first
   *     DECIMAL(28,9)-checkable magnitude, so no check is reachable in
   *     the long regime);
-  *   - a NULL term (null element, zip_with length padding) absorbs:
-  *     the HOF fold keeps NULL to the end, so the kernel returns NULL
-  *     as soon as one occurs — ANSI does not change null propagation;
+  *   - a NULL term (null element, zip_with length padding, NaN/±Inf)
+  *     absorbs: the HOF fold keeps NULL to the end, so the result is
+  *     NULL — but zip_with casts EVERY term before the fold starts, so
+  *     under ANSI a later finite term over 18 digits still throws; the
+  *     kernel scans the remaining terms for that case and otherwise
+  *     returns NULL at once;
   *   - result = DECIMAL(28,9) → double via BigDecimal.doubleValue.
+  *
+  * `ansi` is the session's ANSI mode when the column is built (the
+  * HOF's Cast nodes resolve theirs the same way): a constructor
+  * parameter, so it takes part in equality and survives `copy`.
   */
 case class DecimalFold(left: Expression, right: Expression,
-    squaredDiff: Boolean) extends BinaryExpression {
-
-  // captured at plan time on the driver (the HOF's Cast nodes resolve
-  // their ANSI mode the same way) and serialized with the expression
-  private val ansi: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
+    squaredDiff: Boolean, ansi: Boolean) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -104,6 +106,40 @@ object DecimalFold {
       s"[NUMERIC_VALUE_OUT_OF_RANGE] $v cannot be represented as " +
         s"Decimal($p, 9) (decimal_fold, ANSI mode)")
 
+  /** f(x(i), y(i)) in IEEE double; both elements non-null. */
+  private def term(x: ArrayData, y: ArrayData, i: Int, xFloat: Boolean,
+      yFloat: Boolean, squaredDiff: Boolean): Double = {
+    val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+    val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+    if (squaredDiff) { val d = xv - yv; d * d } else xv * yv
+  }
+
+  // Spark Decimal(Double) == BigDecimal.valueOf (Double.toString's
+  // shortest repr), then changePrecision(18, 9) HALF_UP
+  private def quantize(t: Double): JBD =
+    JBD.valueOf(t).setScale(9, RoundingMode.HALF_UP)
+
+  /** The fold's NULL from term `from` on. Under ANSI the HOF form
+    * still casts every term zip_with pairs up (`until` = the shorter
+    * length; padded positions are NULL), so a finite term over 18
+    * digits among them throws instead. */
+  private def nullFrom(x: ArrayData, y: ArrayData, from: Int, until: Int,
+      xFloat: Boolean, yFloat: Boolean, squaredDiff: Boolean,
+      ansi: Boolean): java.lang.Double = {
+    var i = from
+    while (ansi && i < until) {
+      if (!x.isNullAt(i) && !y.isNullAt(i)) {
+        val t = term(x, y, i, xFloat, yFloat, squaredDiff)
+        if (!java.lang.Double.isNaN(t) && !java.lang.Double.isInfinite(t)) {
+          val bd = quantize(t)
+          if (bd.precision > 18) return overflow(bd, 18, ansi)
+        }
+      }
+      i += 1
+    }
+    null
+  }
+
   /** Shared by interpreted eval and generated code. Returns null (or
     * throws, matching the HOF's ANSI Cast) for every case the HOF form
     * does (see class doc). */
@@ -112,26 +148,23 @@ object DecimalFold {
     val n = x.numElements()
     // zip_with pads the shorter side with nulls; a null term keeps the
     // fold NULL to the end
-    if (n != y.numElements()) return null
+    if (n != y.numElements())
+      return nullFrom(x, y, 0, math.min(n, y.numElements()), xFloat,
+        yFloat, squaredDiff, ansi)
     var accL = 0L
     var accB: JBD = null
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
-      val t =
-        if (squaredDiff) { val d = xv - yv; d * d }
-        else xv * yv
+      if (x.isNullAt(i) || y.isNullAt(i))
+        return nullFrom(x, y, i + 1, n, xFloat, yFloat, squaredDiff, ansi)
+      val t = term(x, y, i, xFloat, yFloat, squaredDiff)
       // CAST(NaN/±Inf AS DECIMAL) is NULL even under ANSI (measured in
       // DecimalFoldSpec — Spark's Cast nulls the non-finite doubles;
       // only FINITE overflow throws in ANSI mode)
       if (java.lang.Double.isNaN(t) || java.lang.Double.isInfinite(t))
-        return null
-      // Spark Decimal(Double) == BigDecimal.valueOf (Double.toString's
-      // shortest repr), then changePrecision(18, 9) HALF_UP with an
-      // 18-digit overflow check
-      val bd = JBD.valueOf(t).setScale(9, RoundingMode.HALF_UP)
+        return nullFrom(x, y, i + 1, n, xFloat, yFloat, squaredDiff, ansi)
+      // the 18-digit overflow check of the term cast
+      val bd = quantize(t)
       if (bd.precision > 18) return overflow(bd, 18, ansi)
       if (accB == null) {
         // precision ≤ 18 → the unscaled value fits a long exactly
@@ -154,39 +187,18 @@ object DecimalFold {
     else accB.doubleValue()
   }
 
-  // session kill-switch (the ScanSpread pattern): lets a same-JVM A/B
-  // measure kernel vs HOF, and a session opt out wholesale
-  private def enabled: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.decimalfold.enabled", "true") == "true"
-
-  private val termDec = org.apache.spark.sql.types.DecimalType(18, 9)
-  private val accDec = org.apache.spark.sql.types.DecimalType(28, 9)
-
-  private def hof(a: Column, b: Column, sq: Boolean): Column = {
-    import org.apache.spark.sql.functions._
-    def term(x: Column, y: Column): Column =
-      if (sq) ((x.cast(DoubleType) - y.cast(DoubleType)) *
-        (x.cast(DoubleType) - y.cast(DoubleType))).cast(termDec)
-      else (x.cast(DoubleType) * y.cast(DoubleType)).cast(termDec)
-    aggregate(
-      zip_with(a, b, term),
-      lit(java.math.BigDecimal.ZERO).cast(accDec),
-      (acc, v) => (acc + v).cast(accDec))
-      .cast(DoubleType)
-  }
+  private def ansiNow: Boolean =
+    org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
 
   /** Exact squared L2 distance: replaces the
     * `aggregate(zip_with(a, b, (x,y) -> CAST((x−y)² AS …)))` form. */
   def sqDist(a: Column, b: Column): Column =
-    if (!enabled) hof(a, b, sq = true)
-    else ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
-      ColumnBridge.expression(b), squaredDiff = true))
+    ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
+      ColumnBridge.expression(b), squaredDiff = true, ansi = ansiNow))
 
   /** Exact dot product: replaces the
     * `aggregate(zip_with(a, b, (x,y) -> CAST(x·y AS …)))` form. */
   def dot(a: Column, b: Column): Column =
-    if (!enabled) hof(a, b, sq = false)
-    else ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
-      ColumnBridge.expression(b), squaredDiff = false))
+    ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
+      ColumnBridge.expression(b), squaredDiff = false, ansi = ansiNow))
 }

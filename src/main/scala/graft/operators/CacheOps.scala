@@ -39,7 +39,7 @@ object CacheOps {
     * is long-suite hygiene, not query semantics: an eager
     * MEMORY_AND_DISK localCheckpoint of every operator result is right
     * for a session that runs hundreds of queries back-to-back
-    * (Verify/Bench set the flag in their builders), but a library
+    * (Verify/Bench pass `GraftSession.Sealed`), but a library
     * caller composing one pipeline would pay an eager materialization
     * of the LARGEST frame in the job — before they filter, limit, or
     * write it — which at corpus scale doubles peak storage I/O.
@@ -48,7 +48,11 @@ object CacheOps {
     * sealing replaces the whole upstream plan with `Scan
     * ExistingRDD`, blinding join-strategy and pushdown assertions). */
   def sealingEnabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.seal.enabled", "false").toBoolean
+    spark.conf.get(SealKey, "false").toBoolean
+
+  /** The sealing switch; long-lived sessions pass
+    * [[graft.GraftSession.Sealed]]. */
+  val SealKey = "spark.graft.seal.enabled"
 
   /** Eagerly materialize `result` as a localCheckpoint, then run the
     * caller's release actions (unpersists / checkpoint drops for

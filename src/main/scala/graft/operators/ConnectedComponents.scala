@@ -49,8 +49,6 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, src: String, dst: String,
       nodes: Option[DataFrame] = None, maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-
     // Convergence check: (count, Σ xxhash64(u,v) as decimal) — two
     // scalars per round, never the edge data. A checksum collision
     // between consecutive DIFFERENT edge sets needs equal counts AND an
@@ -77,22 +75,12 @@ object ConnectedComponents {
     // accumulator's initial buffer), not an exception — without the
     // guard a Spark behavior change would read as instant convergence
     // and return wrong components silently.
-    // Session kill-switch (A/B rig, the ScanSpread pattern): when
-    // disabled the checksum runs as its own exact aggregate job over
-    // the checkpointed blocks — the pre-r19 form.
-    val observeFused = spark.conf
-      .get("spark.graft.cc.observe.enabled", "true") == "true"
     var obsRound = 0
     def checkpointWithChecksum(df: DataFrame)
         : (DataFrame, (Long, java.math.BigDecimal)) = {
       val cs = coalesce(
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO)).as("s")
-      if (!observeFused) {
-        val cp = df.localCheckpoint()
-        val row = cp.agg(count(lit(1)).as("n"), cs).head()
-        return (cp, (row.getLong(0), row.getDecimal(1)))
-      }
       obsRound += 1
       val name = s"graft_cc_cs_$obsRound"
       val obs = df.observe(name, count(lit(1)).as("n"), cs)
@@ -154,64 +142,18 @@ object ConnectedComponents {
         .distinct()
     }
 
-    // Rounds per checkpoint (experiment knob, default 1): with k > 1,
-    // k rounds build lazily with an observe() between each and ONE
-    // localCheckpoint materializes them all — k× fewer actions, at the
-    // cost of the inner rounds' subtrees appearing multiple times in
-    // the fused plan (the self-union; ReuseExchange collapses the
-    // exchange-rooted copies). Per-round convergence granularity is
-    // preserved: every fused round's (count, checksum) is read from
-    // the one materialization.
-    val fusedRounds = if (!observeFused) 1
-      else math.max(1, spark.conf
-        .get("spark.graft.cc.fusedrounds", "1").toInt)
-    def csAgg = coalesce(
-      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-      lit(java.math.BigDecimal.ZERO)).as("s")
     while (!converged && round < maxRounds) {
-      if (fusedRounds <= 1) {
-        val (ss, cur) = checkpointWithChecksum(oneRound(e))
-        converged = same(cur, prev)
-        prev = cur
-        // ss is materialized (eager checkpoint) and checksummed — the
-        // previous round's blocks can never be read again. Release
-        // them NOW so live storage is one round, not `round` rounds
-        // (the round-10 bench showed orphaned per-round checkpoints
-        // piling up across CC-family queries until a GC trough).
-        CacheOps.releaseCheckpoint(e)
-        e = ss
-        round += 1
-      } else {
-        val k = math.min(fusedRounds, maxRounds - round)
-        var cur = e
-        val names = (1 to k).map { _ =>
-          obsRound += 1
-          val name = s"graft_cc_cs_$obsRound"
-          cur = oneRound(cur)
-            .observe(name, count(lit(1)).as("n"), csAgg)
-          name
-        }
-        val cp = cur.localCheckpoint()
-        val css = names.map { n =>
-          val r = cur.queryExecution.observedMetrics(n)
-          (r.getLong(0), r.getDecimal(1))
-        }
-        // A nonempty edge set can never become empty mid-iteration
-        // (small-star always re-emits the sMins stars), so ANY zero
-        // count here is either a genuinely empty input or an
-        // unpopulated metric (inner CollectMetrics dropped by an
-        // exchange-reuse rewrite) — confirm on the materialized data
-        // rather than mis-converge on Row(0, 0) pairs.
-        if (css.exists(_._1 == 0L))
-          require(cp.isEmpty,
-            "observe() metrics not populated in fused CC rounds")
-        CacheOps.releaseCheckpoint(e)
-        e = cp
-        var p = prev
-        css.foreach { c => if (same(c, p)) converged = true; p = c }
-        prev = css.last
-        round += k
-      }
+      val (ss, cur) = checkpointWithChecksum(oneRound(e))
+      converged = same(cur, prev)
+      prev = cur
+      // ss is materialized (eager checkpoint) and checksummed — the
+      // previous round's blocks can never be read again. Release
+      // them NOW so live storage is one round, not `round` rounds
+      // (the round-10 bench showed orphaned per-round checkpoints
+      // piling up across CC-family queries until a GC trough).
+      CacheOps.releaseCheckpoint(e)
+      e = ss
+      round += 1
     }
     require(converged,
       s"connected components did not converge in $maxRounds rounds")

@@ -35,7 +35,7 @@ object Dbscan {
       eps: Long, minPts: Int): DataFrame = {
     require(eps > 0 && minPts >= 1, s"bad eps=$eps minPts=$minPts")
     // NOT spread (re-measured round 20 on the restructured shape:
-    // SpreadAB 1.22×, matching r19's 1.23× loss) — the cell compute is
+    // same-JVM A/B 1.22×, matching r19's 1.23× loss) — the cell compute is
     // light and q235's wall is stage scheduling/planning across the
     // grid join + CC rounds + border logic, not the scan task
     val p = pts.select(col(idCol).cast("long").as("id"),

@@ -23,12 +23,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `PushedFilters`, turning a full-archive scan into row-group-pruned
   * reads at 100 TB.
   *
-  * Installed per-session via [[graft.GraftExtensions.register]] (which
-  * appends it to `spark.experimental.extraOptimizations`; by that
-  * phase predicate pushdown has already substituted the Project alias,
-  * so the conversion expression sits inline in a Filter directly above
-  * the relation — exactly where physical planning collects scan
-  * filters) or via `spark.sql.extensions=graft.GraftExtensions`.
+  * Installed by [[graft.GraftExtensions]] (`injectOptimizerRule`): it
+  * runs in the operator-optimization fixed point, where predicate
+  * pushdown substitutes the Project alias, so the conversion
+  * expression sits inline in a Filter directly above the relation —
+  * exactly where physical planning collects scan filters. Idempotent
+  * (skips conjuncts already present), as a fixed-point rule must be.
   */
 object PushTimestampConversionBounds extends Rule[LogicalPlan]
     with PredicateHelper {

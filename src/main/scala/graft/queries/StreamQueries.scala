@@ -61,55 +61,49 @@ object StreamQueries {
     * (q79's dedup state, the Update-mode sinks' one-emission-per-key)
     * are untouched by the layout.
     *
-    * Measured same-JVM (StreamAB, sf0.1/local[32], median of 3): the
-    * fan pays ONLY where the per-doc work is heavy — q282 docGrams
-    * 0.89×, q236 Dsir occurrences 0.90× — and LOSES a fixed ~0.1–0.2 s
-    * per drain everywhere else (q258 1.28×, q323 1.21×, q302 1.13×,
-    * q314 1.11×, q290 1.37×, q112 1.37×, q63 1.08×, q73 1.05×; fan=4
-    * loses the same as fan=16, so the cost is per-batch multi-task
-    * overhead, not task count). The same decision rule as ScanSpread's
-    * call sites: fan out the heavy funnels, never as a blanket layout.
+    * Measured same-JVM (round 20, OPTIMIZATION_r20.md, sf0.1/local[32],
+    * median of 3): the fan pays ONLY where the per-doc work is heavy —
+    * q282 docGrams 0.89×, q236 Dsir occurrences 0.90× — and LOSES a
+    * fixed ~0.1–0.2 s per drain everywhere else (q258 1.28×, q323
+    * 1.21×, q302 1.13×, q314 1.11×, q290 1.37×, q112 1.37×, q63 1.08×,
+    * q73 1.05×; fan=4 loses the same as fan=16, so the cost is
+    * per-batch multi-task overhead, not task count). The same decision
+    * rule as ScanSpread's call sites: fan out the heavy funnels, never
+    * as a blanket layout.
     * Events twins therefore stay single-file (cap = 1 below). */
   private def landingFanOut(s: org.apache.spark.sql.SparkSession,
-      cap: Int): Int = {
-    // session override — the same-JVM A/B lever (StreamAB): arms pick
-    // their layout (1 = the old single-file landing) in one session;
-    // each layout keys its own landing dir, so arms never mix. The
-    // override REPLACES the call site's cap (test lever only — above 8
-    // it would split q170's maxFilesPerTrigger=8 drain into several
-    // triggers).
-    val c = s.conf.get("spark.graft.stream.landing.fanout", "")
-      match {
-        case "" => cap
-        case v => v.toInt
-      }
-    math.max(1, math.min(c, s.sparkContext.defaultParallelism))
+      cap: Int): Int =
+    math.max(1, math.min(cap, s.sparkContext.defaultParallelism))
+
+  /** `df` written into `landingDir` as `n` parquet files, unless a
+    * completed copy (`_SUCCESS`) is already there; returns the path. */
+  private def landOnce(df: org.apache.spark.sql.DataFrame,
+      landingDir: java.io.File, n: Int): String = {
+    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
+      val w = if (n == 1) df.coalesce(1) else df.repartition(n)
+      w.write.mode("overwrite").parquet(landingDir.toString)
+    }
+    landingDir.toString
   }
 
   /** Shared events landing dir (also read by q170): name carries the
     * layout tag so a relayout can never silently reuse a stale copy.
     * Single-file (measured: every events twin is state/lifecycle-bound,
-    * the fan only added per-batch task overhead); the A/B conf can
-    * still raise it to 8 — q170 reads this landing with
-    * maxFilesPerTrigger = 8, so 8 files stay one trigger there. */
-  private def eventsLandingDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): java.io.File = {
-    val n = landingFanOut(s, 1)
+    * the fan only added per-batch task overhead). Every writer of this
+    * dir writes the tagged layout, so the layout never depends on
+    * which query lands it first. */
+  private[graft] def eventsLandingDir(dir: String): java.io.File =
     new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-q53-landing-${datasetKey(dir)}-p$n")
-  }
+      s"graft-q53-landing-${datasetKey(dir)}-p1")
+
+  private def eventsLanding(dir: String,
+      ev: org.apache.spark.sql.DataFrame): String =
+    landOnce(ev, eventsLandingDir(dir), 1)
 
   private def eventsStream(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val ev = Tables.load(s, dir, "events")
-    val landingDir = eventsLandingDir(s, dir)
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val n = landingFanOut(s, 1)
-      val w = if (n == 1) ev.coalesce(1) else ev.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
-    StreamOps.landingZone(s, landing, ev.schema)
+    StreamOps.landingZone(s, eventsLanding(dir, ev), ev.schema)
   }
 
   val qs: Seq[Q] = Seq(
@@ -290,7 +284,7 @@ object StreamQueries {
       (s, dir) => {
         val stream = eventsStream(s, dir)
         val base = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft-q121-${datasetKey(dir)}-p${landingFanOut(s, 1)}")
+          s"graft-q121-${datasetKey(dir)}-p1")
         StreamOps.mergeLatestSink(s, stream,
           new java.io.File(base, "state").toString,
           new java.io.File(base, "checkpoint").toString)
@@ -633,7 +627,7 @@ object StreamQueries {
         FROM est ORDER BY 1""")),
 
     // Real-time continuous aggregate: q166's rollup maintained by a
-    // STREAM — each micro-batch (several parquet files per trigger)
+    // STREAM — each micro-batch (up to 8 landing files per trigger)
     // appends to raw and refreshes exactly its event-time span, so
     // buckets straddling micro-batches are refreshed again by the
     // last batch that touches them (parquet files are not
@@ -644,16 +638,11 @@ object StreamQueries {
     Q("q170_stream_continuous_aggregate",
       (s, dir) => {
         val ev = Tables.load(s, dir, "events")
-        // shared with eventsStream: ≤ 8 files, so maxFilesPerTrigger=8
-        // below still drains in the same number of triggers as the
-        // old single-file layout
-        val landingDir = eventsLandingDir(s, dir)
-        if (!new java.io.File(landingDir, "_SUCCESS").exists())
-          ev.repartition(landingFanOut(s, 8))
-            .write.mode("overwrite").parquet(landingDir.toString)
+        // shared with eventsStream, so it lands the same single-file
+        // layout the dir's tag names
         val stream = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 8)
-          .parquet(landingDir.toString)
+          .parquet(eventsLanding(dir, ev))
         val ds = new graft.ingest.IngestDataset(s,
           java.nio.file.Files.createTempDirectory("graft-q170").toString,
           "events_ds")
@@ -1052,21 +1041,15 @@ object StreamQueries {
   )
 
   /** Embeddings landing zone (the documentsStream pattern):
-    * single-file — StreamAB measured the fan a 1.37× LOSS on q290
+    * single-file — the round-20 A/B measured the fan a 1.37× LOSS on q290
     * (its cost is the per-batch broadcast + Update-mode state, not
     * the scan). */
   private def embeddingsStream(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val n = landingFanOut(s, 1)
-    val landingDir = new java.io.File(
+    val landing = landOnce(emb, new java.io.File(
       sys.props("java.io.tmpdir"),
-      s"graft-q290-landing-${datasetKey(dir, "embeddings")}-p$n")
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val w = if (n == 1) emb.coalesce(1) else emb.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
+      s"graft-q290-landing-${datasetKey(dir, "embeddings")}-p1"), 1)
     StreamOps.landingZone(s, landing, emb.schema)
   }
 
@@ -1083,14 +1066,9 @@ object StreamQueries {
       dir: String, cap: Int = 1): org.apache.spark.sql.DataFrame = {
     val docs = Tables.load(s, dir, "documents")
     val n = landingFanOut(s, cap)
-    val landingDir = new java.io.File(
+    val landing = landOnce(docs, new java.io.File(
       sys.props("java.io.tmpdir"),
-      s"graft-q236-landing-${datasetKey(dir, "documents")}-p$n")
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val w = if (n == 1) docs.coalesce(1) else docs.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
+      s"graft-q236-landing-${datasetKey(dir, "documents")}-p$n"), n)
     StreamOps.landingZone(s, landing, docs.schema)
   }
 }

@@ -58,7 +58,7 @@ object TextOps {
         // presents the order, keeps the heavy projection out of the
         // range-boundary sample pass, and pins the partition count so
         // AQE can't coalesce the projection onto one task — rows and
-        // order identical to project-then-orderBy (SortFirstAB)
+        // order identical to project-then-orderBy (OPTIMIZATION_r19.md)
         graft.sources.ScanSpread
           .sortedSpread(Tables.load(s, dir, "documents"), col("doc_id"))
           .select(

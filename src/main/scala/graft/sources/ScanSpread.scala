@@ -48,13 +48,7 @@ object ScanSpread {
     * same magnitude AQE would pick for a result-sized sort. */
   def sortedSpread(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame = {
-    val spark = df.sparkSession
-    // honor the same session kill-switch as spread(): disabling
-    // scanspread must restore the pre-rewrite plan (a plain global
-    // orderBy) so a same-JVM A/B can isolate this rewrite too
-    if (spark.conf.get("spark.graft.scanspread.enabled", "true") != "true")
-      return df.orderBy(keys: _*)
-    val par = spark.sparkContext.defaultParallelism
+    val par = df.sparkSession.sparkContext.defaultParallelism
     if (par <= 1) df.orderBy(keys: _*)
     else df.repartitionByRange(par, keys: _*)
       .sortWithinPartitions(keys: _*)
@@ -64,10 +58,6 @@ object ScanSpread {
     * backing file layout cannot reach that parallelism on its own. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    // session kill-switch — lets an A/B measure the repair in one JVM
-    // (and a production session opt out wholesale)
-    if (spark.conf.get("spark.graft.scanspread.enabled", "true") != "true")
-      return df
     val par = spark.sparkContext.defaultParallelism
     if (par <= 1) return df
     val files =

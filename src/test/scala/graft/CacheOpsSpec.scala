@@ -18,23 +18,16 @@ class CacheOpsSpec extends SparkSpec {
   private def storedRdds(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Sealing is opt-in (Verify/Bench set it in their builders); the
+  /** Sealing is opt-in (Verify/Bench pass `GraftSession.Sealed`); the
     * tests that exercise the seal/release machinery turn it on the
     * same way, restoring the session's prior state after. */
-  private def withSealing[A](body: => A): A = {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.seal.enabled", v)
-      case None => spark.conf.unset("spark.graft.seal.enabled")
-    }
-  }
+  private def withSealing[A](body: => A): A =
+    withConf(GraftSession.Sealed.toSeq: _*)(body)
 
   test("default session: sealThen returns the LAZY frame and keeps " +
       "caches — library callers never pay an eager materialization") {
     CacheOps.sweep(spark)
-    assert(spark.conf.getOption("spark.graft.seal.enabled").isEmpty ||
+    assert(spark.conf.getOption(CacheOps.SealKey).isEmpty ||
       !CacheOps.sealingEnabled(spark),
       "suite session unexpectedly has sealing forced on")
     val cached = (1 to 100).toDF("x").persist()

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Same-JVM alternating A/B over an arbitrary session conf — the
-  * SpreadAB discipline generalized: runs each named query `reps`× with
-  * the conf at <aValue> and at <bValue>, interleaved, and prints
-  * per-arm medians. Used round 20 for the CC observe-fusion and
-  * fused-rounds adjudications on q235's shape.
+/** The A/B rig: same-JVM alternating A/B over an arbitrary session
+  * conf (e.g. `spark.graft.seal.enabled`, any `spark.sql.*` runtime
+  * conf). Runs each named query `reps`× with the conf at <aValue> and
+  * at <bValue>, interleaved after one warm-up per arm, and prints
+  * per-arm medians. The session is [[GraftSession]]'s sealed one — the
+  * configuration Bench measures.
   *
   * `sbt "Test/runMain graft.ConfAB <dir> <q,[q...]> <confKey> <aValue> <bValue> [reps]"`
   */
@@ -18,16 +17,7 @@ object ConfAB {
     val aVal = args(3)
     val bVal = args(4)
     val reps = if (args.length > 5) args(5).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.seal.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(overrides = GraftSession.Sealed)
 
     def once(name: String): Double = {
       graft.operators.CacheOps.sweep(spark, blocking = true)

@@ -72,48 +72,4 @@ class ConnectedComponentsSpec extends SparkSpec {
     val got = cc(Seq.empty, nodes = Some(Seq(1L, 2L)))
     assert(got == Map(1L -> 1L, 2L -> 2L))
   }
-
-  /** Runs `body` with a session conf temporarily set. */
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("observe kill-switch (separate checksum job) gives identical components") {
-    val rnd = new Random(7)
-    val n = 80
-    val nodes = (0L until n.toLong).toSeq
-    val edges = Seq.fill(60)(
-      (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-    val expected = unionFind(edges, nodes)
-    withConf("spark.graft.cc.observe.enabled", "false") {
-      assert(cc(edges, Some(nodes)) == expected)
-    }
-    assert(cc(edges, Some(nodes)) == expected)
-  }
-
-  test("fused rounds (checkpoint every 2nd round) give identical components") {
-    withConf("spark.graft.cc.fusedrounds", "2") {
-      // path chain exercises multiple fused windows before converging
-      val edges = (0L until 199L).map(i => (i, i + 1))
-      val got = cc(edges)
-      assert(got.size == 200 && got.values.forall(_ == 0L))
-      // random graphs vs union-find under fusion
-      val rnd = new Random(11)
-      val n = 80
-      val nodes = (0L until n.toLong).toSeq
-      val es = Seq.fill(60)(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      assert(cc(es, Some(nodes)) == unionFind(es, nodes))
-      // empty input still yields singletons (converged-at-cs0 path)
-      assert(cc(Seq.empty, nodes = Some(Seq(1L, 2L)))
-        == Map(1L -> 1L, 2L -> 2L))
-    }
-  }
 }

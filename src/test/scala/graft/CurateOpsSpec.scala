@@ -28,22 +28,11 @@ class CurateOpsSpec extends SparkSpec {
 
   test("q270 chi² marginals derive from the persisted contingency " +
       "aggregate — the densify diamond must not re-scan the corpus") {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "false")
-    try {
-      val df = queries.Registry.queries("q270_chi2_split_drift")(spark, sf)
-      val p = df.queryExecution.executedPlan.toString
-      // obs feeds sources-distinct, splits-distinct, and the left-join
-      // probe: all three must read the InMemory relation
-      val mem = "InMemoryTableScan".r.findAllIn(p).length
-      assert(mem >= 3, s"obs must be reused via the cache:\n$p")
-    } finally {
-      graft.operators.CacheOps.sweep(spark)
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.seal.enabled", v)
-        case None => spark.conf.unset("spark.graft.seal.enabled")
-      }
-    }
+    val p = plan("q270_chi2_split_drift")
+    // obs feeds sources-distinct, splits-distinct, and the left-join
+    // probe: all three must read the InMemory relation
+    val mem = "InMemoryTableScan".r.findAllIn(p).length
+    assert(mem >= 3, s"obs must be reused via the cache:\n$p")
   }
 
   test("q270 chi² table is DENSE: every source carries a cell for " +

@@ -139,6 +139,53 @@ class DecimalFoldSpec extends SparkSpec {
     }
   }
 
+  test("a NULL or NaN term before an overflowing term matches the HOF, " +
+      "ANSI on and off") {
+    // zip_with casts every term before the fold starts, so under ANSI
+    // the later overflow throws although the earlier term already made
+    // the fold NULL; with ANSI off both forms are NULL
+    val schema = StructType(Seq(
+      StructField("a", ArrayType(DoubleType, containsNull = true)),
+      StructField("b", ArrayType(DoubleType, containsNull = true))))
+    val rows = Seq(
+      Row(Seq(Double.NaN, 1e9), Seq(1.0, 1.0)),
+      Row(Seq(null, 1e9), Seq(1.0, 1.0)),
+      Row(Seq(1.0, Double.NaN, 2e9), Seq(1.0, 1.0, 1.0)),
+      // length mismatch: the pairs zip_with does build are still cast
+      Row(Seq(1e9, 1.0), Seq(1.0)))
+    def outcome(row: Row, c: org.apache.spark.sql.Column)
+        : Either[String, Any] = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(row), 1), schema)
+      try {
+        val r = df.select(c.as("v")).collect().head
+        Right(if (r.isNullAt(0)) null else r.getDouble(0))
+      } catch { case _: Throwable => Left("threw") }
+    }
+    for ((ansi, want) <- Seq("true" -> Left("threw"), "false" -> Right(null)))
+      withConf("spark.sql.ansi.enabled" -> ansi) {
+        rows.foreach { row =>
+          Seq(DecimalFold.sqDist(col("a"), col("b")) -> sqHof,
+              DecimalFold.dot(col("a"), col("b")) -> dotHof).foreach {
+            case (kernel, hof) =>
+              val h = outcome(row, expr(hof))
+              assert(h == want, s"ansi=$ansi hof gave $h on $row")
+              assert(outcome(row, kernel) == h,
+                s"ansi=$ansi kernel differs from hof $h on $row")
+          }
+        }
+      }
+  }
+
+  test("ANSI mode is part of node equality and survives copy") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val on = DecimalFold(Literal(1), Literal(2), squaredDiff = true,
+      ansi = true)
+    assert(on != on.copy(ansi = false))
+    assert(on.withNewChildren(Seq(Literal(3), Literal(4)))
+      .asInstanceOf[DecimalFold].ansi)
+  }
+
   test("accumulator long→BigDecimal promotion region stays exact") {
     // dot terms 6.25e8 (unscaled 6.25e17): 15+ terms cross
     // Long.MaxValue (9.2e18) on the unscaled sum without overflowing

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Exchange-count / join-strategy audit over the round-6 operator
   * additions: `sbt "Test/runMain graft.ExplainAudit"` prints, per
   * query, the hash-exchange count and any nested-loop/cartesian joins
@@ -10,13 +8,9 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
-    // audit the real upstream plans, not the sealed `Scan ExistingRDD`
-    spark.conf.set("spark.graft.seal.enabled", "false")
+    // unsealed: audit the real upstream plans, not the sealed
+    // `Scan ExistingRDD`
+    val spark = GraftSession.local(4)
     val qs = Seq("q113_fuzzy_block_join", "q114_kmv_distinct",
       "q115_stratified_sample", "q116_ewma", "q117_winsorize",
       "q118_skyline", "q119_mode_per_group", "q120_ordered_string_agg",

@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Job-level wall breakdown for a registered query — the measurement
-  * companion to [[QuickExplain]]: where QuickExplain shows the plan
-  * SHAPE, this shows where the WALL goes (per-job duration, task
+  * companion to [[PlanDump]]: where PlanDump shows the plan SHAPE,
+  * this shows where the WALL goes (per-job duration, task
   * count, gaps between jobs = driver-side planning/analysis time).
   *
   * `sbt "Test/runMain graft.JobProbe <dir> <query>[,query...]"`
@@ -20,16 +19,7 @@ object JobProbe {
     val names = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq("q70_dup_clusters"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.seal.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(overrides = GraftSession.Sealed)
 
     case class J(id: Int, start: Long, var end: Long = 0L,
       var tasks: Int = 0, var stages: Int = 0)

@@ -28,9 +28,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q306_cell_conductance hand-count: 5 distinct BNLJ kernels, " +
       "not the 23 the text grep reported") {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "false")
-    try {
+    try withConf(graft.operators.CacheOps.SealKey -> "false") {
       val df = graft.queries.Registry.queries("q306_cell_conductance")(
         spark, sf)
       val c = PlanAudit.audit(df)
@@ -42,11 +40,7 @@ class PlanAuditSpec extends SparkSpec {
       // reprint noise
       assert(c.bnlj == 5, s"q306 hand count is 5 bounded kernels, got $c")
       assert(c.cartesian == 0, s"q306 must not plan a cartesian: $c")
-    } finally {
-      prev.fold(spark.conf.unset("spark.graft.seal.enabled"))(
-        spark.conf.set("spark.graft.seal.enabled", _))
-      graft.operators.CacheOps.sweep(spark, blocking = true)
-    }
+    } finally graft.operators.CacheOps.sweep(spark, blocking = true)
   }
 
   test("a planted unpersisted diamond is flagged; persisting clears it") {

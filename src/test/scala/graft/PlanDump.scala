@@ -1,49 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dump `.explain("formatted")` for registered queries to files — the
-  * committed plan evidence behind OPTIMIZATION_r*.md (the judge
-  * checks plan claims against these files).
+/** Plan dump for registered queries — the committed plan evidence
+  * behind OPTIMIZATION_r*.md and the tool for cross-scale plan diffs
+  * (e.g. "did AQE flip a join strategy between 10x and 100x?").
   *
-  * `sbt "Test/runMain graft.PlanDump <dir> <outDir> <suffix> <q,[q...]>"`
-  * writes `<outDir>/<query>_<suffix>.txt` holding the FORMATTED plan
-  * (post-execution, so AQE's final decisions are visible in the
-  * AdaptiveSparkPlan) after running the query through the noop sink.
+  * `sbt "Test/runMain graft.PlanDump <dir> <q[,q...]> [<outDir> <suffix>]"`
   *
-  * Round 20: the file ALSO carries every INTERMEDIATE SQL execution
-  * the query ran (captured via a QueryExecutionListener) — iterative
+  * Each query first runs through the noop sink, so AQE's final
+  * decisions are visible in the AdaptiveSparkPlan. The FORMATTED plan
+  * then goes to `<outDir>/<query>_<suffix>.txt`, or to stdout when no
+  * `outDir` is given, followed by every INTERMEDIATE SQL execution the
+  * query ran (captured via a QueryExecutionListener): iterative
   * operators truncate lineage with `localCheckpoint`, so the final
   * plan shows only `Scan ExistingRDD` and the interesting stages (the
-  * dedup family's spread exchange, the CC round shape) were invisible
-  * in the r19 dumps. Each checkpoint/collect materialization goes
+  * dedup family's spread exchange, the CC round shape) would be
+  * invisible otherwise. Each checkpoint/collect materialization goes
   * through `SQLExecution.withNewExecutionId`, so the listener sees its
-  * full pre-truncation plan.
+  * full pre-truncation plan. Last comes one `AUDIT <query> <counts>`
+  * line on stdout ([[PlanAudit]] over the final plan).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val outDir = args(1)
-    val suffix = args(2)
-    val names = args(3).split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.seal.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
-    // PLANDUMP_CONF="k=v,k=v" — session confs for the dump run; the
-    // round-20 kill-switches (decimalfold/scanspread/cc.observe) let
-    // one binary produce both the before and the after plan
-    sys.env.get("PLANDUMP_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val names = args(1).split(",").map(_.trim).toSeq
+    val out = args.lift(2).map(d => (d, args(3)))
+    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    out.foreach(o =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(o._1)))
 
     // every SQL execution during the query body, in completion order
     val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
@@ -77,12 +60,19 @@ object PlanDump {
           s"\n\n==== intermediate execution #${i + 1} ($fn) ====\n")
         txt.append(plan)
       }
-      val out = txt.toString
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-        out.getBytes("UTF-8"))
-      println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
-        s"(${out.linesIterator.size} lines, ${inner.size} intermediate)")
+      out match {
+        case Some((outDir, suffix)) =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
+            txt.toString.getBytes("UTF-8"))
+          println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
+            s"(${txt.toString.linesIterator.size} lines, " +
+            s"${inner.size} intermediate)")
+        case None =>
+          println(s"==== $name @ $dir ====")
+          println(txt)
+      }
+      println(s"AUDIT $name ${PlanAudit.audit(df.queryExecution.executedPlan)}")
     }
     spark.stop()
   }

@@ -122,7 +122,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("hamming_distance kernel ≡ reference count, codegen and interpreted") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { _ =>
       val n = rnd.nextInt(65)
@@ -158,7 +157,6 @@ class PropertySpec extends SparkSpec {
 
   test("nfc_normalize kernel ≡ java.text.Normalizer, codegen + SQL + " +
       "interpreted, incl. Hangul jamo and combining-mark stacks") {
-    GraftExtensions.register(spark)
     val cases = Seq(
       "Cafe\u0301",            // e + combining acute -> \u00e9
       "Caf\u00e9",             // already precomposed (fast path)

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Empirical scale proof (r14 verdict #5): run the five flagship
   * pipeline composites at sf0.1 and at a 10x corpus
@@ -23,15 +22,7 @@ object ScaleProof {
     // re-measuring a single fixed operator without the full sweep
     val onlyNames = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.seal.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(overrides = GraftSession.Sealed)
 
     val shufRead = new LongAdder
     val shufWrite = new LongAdder

@@ -15,15 +15,9 @@ class ScaleSpec extends SparkSpec {
   // as a bare `Scan ExistingRDD` over the checkpoint, which would make
   // every join-strategy assertion below vacuous. Disable sealing per
   // test, restore after (the session is JVM-shared across suites).
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "false")
-    try super.withFixture(test)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.seal.enabled", v)
-      case None => spark.conf.unset("spark.graft.seal.enabled")
-    }
-  }
+  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    withConf(graft.operators.CacheOps.SealKey -> "false")(
+      super.withFixture(test))
 
   test("AQE splits a skewed sort-merge join partition at runtime") {
     // The complement of manual salting (SkewJoin): for joins we DON'T
@@ -32,34 +26,20 @@ class ScaleSpec extends SparkSpec {
     // 1-hot-key join under low split thresholds must show skew=true
     // in the FINAL adaptive plan (only available post-execution), and
     // the result must equal the non-adaptive join.
-    val keep = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pad = "x" * 64
-      val left = spark.range(0, 30000)
-        .select(when($"id" < 29000, lit(7L)).otherwise($"id" % 64)
-          .as("k"), concat(lit(pad), $"id").as("v"))
-      val right = spark.range(0, 64).select($"id".as("k"),
-        concat(lit("r"), $"id").as("w"))
+    val pad = "x" * 64
+    val left = spark.range(0, 30000)
+      .select(when($"id" < 29000, lit(7L)).otherwise($"id" % 64)
+        .as("k"), concat(lit(pad), $"id").as("v"))
+    val right = spark.range(0, 64).select($"id".as("k"),
+      concat(lit("r"), $"id").as("w"))
+    val got = withConf(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = left.join(right, "k")
       // execute THIS QueryExecution (count() would build a new one and
       // leave `joined`'s adaptive plan unfinalized)
@@ -69,10 +49,10 @@ class ScaleSpec extends SparkSpec {
         s"adaptive plan did not finalize:\n$finalPlan")
       assert(finalPlan.contains("skew=true"),
         s"AQE did not split the hot partition:\n$finalPlan")
-      restore()
-      assert(got == left.join(right, "k").count(),
-        "skew-split join changed the row count")
-    } finally restore()
+      got
+    }
+    assert(got == left.join(right, "k").count(),
+      "skew-split join changed the row count")
   }
 
   test("saltedJoin equals plain join results (inner + left)") {
@@ -114,15 +94,12 @@ class ScaleSpec extends SparkSpec {
       "bucketed join must not shuffle")
     // sanity: un-bucketed twin DOES shuffle (broadcast disabled so the
     // tiny test tables can't sidestep the exchange)
-    val thr = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(thr)
-    spark.conf.set(thr, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plain = o.join(
         l.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey")
       assert(CoLocate.hasShuffle(plain))
       assert(joined.count() == plain.count())
-    } finally spark.conf.set(thr, prev)
+    }
   }
 
   test("loadEventsSince pushes the time bound into the parquet scan") {
@@ -135,10 +112,10 @@ class ScaleSpec extends SparkSpec {
     // the raw-long predicate must reach the scan's pushed filters...
     assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"),
       s"raw-nanos bound not pushed to parquet:\n$plan")
-    // ...and filtering the CONVERTED column — a pushdown barrier for
-    // stock Catalyst — is rescued by PushTimestampConversionBounds
-    // (installed by GraftExtensions.register in SparkSpec): the rule
-    // conjoins an implied raw-long bound that lands in PushedFilters
+    // ...and filtering the CONVERTED column lands a bound in
+    // PushedFilters too. On this fixture's timestamp_ntz layout stock
+    // Spark already pushes the cast; GraftSessionSpec pins
+    // PushTimestampConversionBounds itself on a raw-nanos layout
     val naive = Tables.load(spark, sf, "events")
       .filter(col("ts") >= expr(s"timestamp_micros($since)"))
     val naivePlan = naive.queryExecution.executedPlan.toString
@@ -161,7 +138,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("cosine_similarity callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT cosine_similarity(
            CAST(array(1.0, 0.0) AS ARRAY<FLOAT>),
@@ -171,7 +147,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("cosine_similarity rejects array<double> at analysis time") {
-    GraftExtensions.register(spark)
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql(
         "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D))")

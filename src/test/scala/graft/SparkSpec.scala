@@ -3,21 +3,28 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy), with the
-  * engine's extensions installed — the same surface Verify/Bench run. */
+import graft.operators.CacheOps
+
+/** Shared local session for specs (one per JVM, lazy), built by the
+  * same factory Verify/Bench use — 4 cores, 4 shuffle partitions,
+  * unsealed (library mode). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with session confs temporarily set, restoring (or
+    * unsetting) each one after — the session is JVM-shared across
+    * suites, so a conf a test sets must never leak into the next. */
+  protected def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Executed-plan string of a registry query with sealing DISABLED
     * while building: CacheOps.sealThen otherwise replaces the whole
@@ -25,17 +32,9 @@ trait SparkSpec extends AnyFunSuite {
     * assertion on a sealed query vacuously true. One shared
     * definition — per-suite copies of this protocol is how the
     * vacuous-assert bug crept in. */
-  protected def plan(name: String): String = {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "false")
-    try queries.Registry.queries(name)(spark, sf)
-      .queryExecution.executedPlan.toString
-    finally {
-      operators.CacheOps.sweep(spark)
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.seal.enabled", v)
-        case None => spark.conf.unset("spark.graft.seal.enabled")
-      }
-    }
-  }
+  protected def plan(name: String): String =
+    try withConf(CacheOps.SealKey -> "false") {
+      queries.Registry.queries(name)(spark, sf)
+        .queryExecution.executedPlan.toString
+    } finally CacheOps.sweep(spark)
 }

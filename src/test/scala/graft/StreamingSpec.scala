@@ -12,6 +12,30 @@ class StreamingSpec extends SparkSpec {
   private def landing(): String =
     Files.createTempDirectory("stream-landing").toString
 
+  test("q170 writes the events landing in the layout its dir tag names") {
+    // the events landing is shared by q170 and every events twin, so
+    // whichever query lands it first fixes the layout all of them read;
+    // a fresh copy of the events table keys a fresh landing dir, so
+    // q170 is the writer here
+    val dir = Files.createTempDirectory("q170-landing-src")
+    Files.copy(java.nio.file.Paths.get(sf, "events.parquet"),
+      dir.resolve("events.parquet"))
+    val landing = graft.queries.StreamQueries.eventsLandingDir(dir.toString)
+    try {
+      assert(!landing.exists())
+      graft.queries.Registry.queries("q170_stream_continuous_aggregate")(
+        spark, dir.toString).collect()
+      val tagged = "-p(\\d+)$".r.findFirstMatchIn(landing.getName)
+        .getOrElse(fail(s"untagged landing dir $landing")).group(1).toInt
+      val files = landing.listFiles()
+        .count(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+      assert(files == tagged,
+        s"$landing holds $files data files, its tag names $tagged")
+    } finally Seq(landing, dir.toFile)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
   test("multi-file landing zone drains as ONE batch under AvailableNow") {
     // Pins the round-20 landing fan-out contract: with no
     // maxFilesPerTrigger, an AvailableNow drain takes EVERY available

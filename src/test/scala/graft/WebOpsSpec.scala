@@ -125,23 +125,12 @@ class WebOpsSpec extends SparkSpec {
 
   test("q279 plan: corpus and source frequency tables derive from " +
       "the persisted (source,token) aggregate, not re-scans") {
-    val prev = spark.conf.getOption("spark.graft.seal.enabled")
-    spark.conf.set("spark.graft.seal.enabled", "false")
-    try {
-      val df = queries.Registry.queries("q279_source_kl")(spark, sf)
-      val p = df.queryExecution.executedPlan.toString
-      // tf feeds the join probe, ctf, stot and ctot — every consumer
-      // must read the InMemory relation (4 scans of it), and the
-      // diamond must not multiply parquet scans
-      val mem = "InMemoryTableScan".r.findAllIn(p).length
-      assert(mem >= 3, s"tf must be reused via the cache:\n$p")
-    } finally {
-      graft.operators.CacheOps.sweep(spark)
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.seal.enabled", v)
-        case None => spark.conf.unset("spark.graft.seal.enabled")
-      }
-    }
+    val p = plan("q279_source_kl")
+    // tf feeds the join probe, ctf, stot and ctot — every consumer
+    // must read the InMemory relation (4 scans of it), and the
+    // diamond must not multiply parquet scans
+    val mem = "InMemoryTableScan".r.findAllIn(p).length
+    assert(mem >= 3, s"tf must be reused via the cache:\n$p")
   }
 
   test("q284 robots precedence: longest matching prefix wins — " +

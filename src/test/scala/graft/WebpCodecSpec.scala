@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.operators.{MediaCodecs, WebpCodec}
 
 /** WebpCodec vs the reference implementation.
@@ -17,7 +15,7 @@ import graft.operators.{MediaCodecs, WebpCodec}
   * Scala, Python and libwebp agree pixel-exact on every stream — the
   * q295 two-transcription evidence standard.
   */
-class WebpCodecSpec extends AnyFunSuite {
+class WebpCodecSpec extends SparkSpec {
 
   private def res(name: String): Array[Byte] = {
     val in = getClass.getResourceAsStream(s"/graft/$name")
@@ -314,9 +312,6 @@ class WebpCodecSpec extends AnyFunSuite {
 
   test("decodeStats routes webp: VP8L to pixel stats, lossy to " +
       "census-backed alpha stats") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
     import spark.implicits._
     val media = spark.createDataset(Seq(
       graft.operators.Multimodal.MediaRow(1L, "image",
