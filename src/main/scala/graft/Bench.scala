@@ -352,10 +352,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // opt in to result-sealing: this long-lived multi-hundred-query
-    // session is exactly what the CacheOps hygiene exists for
-    // (library sessions default to lazy results — CacheOps scaladoc)
-    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    // the same lazy execution mode as every library caller; the
+    // operators' caches are this harness's to release (CacheOps.sweep
+    // before every timed run)
+    val spark = GraftSession.local()
 
     // Box-speed probe: the bench box is co-tenanted and same-code full
     // runs have varied 225–298 s within hours (PLANS.md r12). A fixed
@@ -526,7 +526,10 @@ object Bench {
     // AND persisted RDDs — localCheckpoint blocks are invisible to
     // clearCache and otherwise linger until a GC-driven ContextCleaner
     // pass: the round-9/10 positional-cluster mechanism), then time the
-    // query, then snapshot what it left behind in block storage.
+    // query, then snapshot what it left behind in block storage. The
+    // leaked_* figures count the operators' own caches and checkpoints
+    // (operators return lazy results and leave release to the caller),
+    // which the next run's sweep drops.
     // Heap actually RETAINED (live set after the last collection, from
     // the pools' collection-usage counters — free to read, no forced
     // GC): the r13 driver run showed per-query heap_mb drifting to

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.CacheOps
-
 /** The one local-session factory: Verify, Bench, Demo, every spec and
   * every test-tree rig build their session here, so what a rig
   * measures is configured exactly like what the bench and the oracle
@@ -19,11 +17,6 @@ object GraftSession {
   /** `SPARK_GRAFT_CPUS`, else 4. */
   private def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
-
-  /** The override that opts a long-lived multi-query session (Verify,
-    * Bench, the rigs) in to result sealing — see
-    * [[CacheOps.sealingEnabled]]. */
-  val Sealed: Map[String, String] = Map(CacheOps.SealKey -> "true")
 
   def local(cpus: Int = defaultCpus,
       overrides: Map[String, String] = Map.empty): SparkSession = {

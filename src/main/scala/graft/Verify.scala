@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.local(overrides = GraftSession.Sealed ++ Map(
+    val spark = GraftSession.local(overrides = Map(
       // micros (not INT96) so the dumped timestamps carry the same
       // logical type/resolution as the DuckDB oracle's output
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
@@ -44,9 +44,9 @@ object Verify {
         d.mkdirs()
       }
       // each result is fully on disk before the next query runs, so
-      // dropping all session storage (incl. sealed localCheckpoint
-      // blocks) between queries is safe and keeps the 252-query dump
-      // from accumulating block storage
+      // dropping all session storage (the operators' caches and
+      // checkpoints) between queries is safe and keeps the 334-query
+      // dump from accumulating block storage
       operators.CacheOps.sweep(spark, blocking = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

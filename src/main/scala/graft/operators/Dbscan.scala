@@ -130,21 +130,12 @@ object Dbscan {
       .groupBy(col("bid").as("id"))
       .agg(min(col("cluster")).as("bcluster"))
     // Core and border id sets are disjoint (border = non-core with a
-    // core neighbor), so the labeled universe is one union. Seal it
-    // eagerly, then release the four persisted intermediates AND the
-    // CC-internal checkpoint reachable through `comp` — deterministic
-    // release instead of waiting for a GC-driven ContextCleaner pass
-    // (the round-10 bench leak). The final frame is then a lazy
-    // projection of the RAW input joined to the sealed labels, so no
-    // released cache is ever re-read.
-    val combined = comp
+    // core neighbor), so the labeled universe is one union, joined
+    // back to the RAW input so noise points keep a row.
+    val labeled = comp
       .select(col("id"), col("cluster"), lit(true).as("is_core"))
       .unionByName(border.select(col("id"),
         col("bcluster").as("cluster"), lit(false).as("is_core")))
-    val labeled = CacheOps.sealThen(combined) {
-      CacheOps.releaseCheckpointExcept(combined, pts)
-      Seq(p, pairs, core, coreToRep, marked).foreach(_.unpersist(false))
-    }
     pts.select(col(idCol).cast("long").as("id"))
       .join(labeled, Seq("id"), "left")
       .select(col("id"),

@@ -178,15 +178,14 @@ object Dedup {
     // its own query stage (measured r15: the signature groupBy ran
     // TWICE, ~2×1 s warm / 2×20 s JIT-cold at sf0.1) — exchange reuse
     // across AQE stages is not a contract to lean on; a persisted
-    // 5-column frame of |docs|×bands rows is. Released by the sealed
-    // result below (lazy library sessions release at the caller's
-    // sweep — same contract as [[jaccardPrefixFiltered]]'s shingles).
+    // 5-column frame of |docs|×bands rows is, released by the
+    // caller's [[CacheOps.sweep]].
     val bk = capWidth(bkAll, maxBucketWidth, "minhash", "band", "bkey")
       .persist()
     val agree = (0 until numHashes).map(i =>
       when(col(s"a.mh$i") === col(s"b.mh$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val pairs = bk.as("a")
+    bk.as("a")
       .join(bk.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -194,7 +193,6 @@ object Dedup {
         (agree.cast(DoubleType) / lit(numHashes.toDouble)).as("est"))
       .groupBy("doc_a", "doc_b")
       .agg(max(col("est")).as("est_jaccard"))
-    CacheOps.sealAndRelease(pairs, bk)
   }
 
   /** Asymmetric LSH — the DAILY-INGEST dedup path: candidates only
@@ -384,7 +382,7 @@ object Dedup {
         .groupBy("doc_id")
         .agg(sort_array(collect_list(col("shingle"))).as("arr"),
           count(lit(1)).as("n"))
-      val verified = cand
+      cand
         .join(docArrs.select(col("doc_id").as("doc_a"),
           col("arr").as("arr_a"), col("n").as("na")), Seq("doc_a"))
         .join(docArrs.select(col("doc_id").as("doc_b"),
@@ -395,7 +393,6 @@ object Dedup {
           (col("na") + col("nb") - col("inter")).cast(DoubleType))
         .filter(col("jaccard") >= minJaccard)
         .select("doc_a", "doc_b", "jaccard")
-      CacheOps.sealAndRelease(verified, sh)
     }
 
   /** Shingle containment (|A∩B| / min(|A|,|B|)) for every pair sharing
@@ -419,7 +416,7 @@ object Dedup {
     // frame; at cluster scale the equivalent is a staged write.
     val sh = capWidth(shAll, maxDocFreq, "containment", "shingle").cache()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val out = sh.as("a")
+    sh.as("a")
       .join(sh.as("b").hint("shuffle_hash"),
         col("a.shingle") === col("b.shingle") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -435,8 +432,6 @@ object Dedup {
           least(col("na"), col("nb")).cast(DoubleType))
           .as("containment"))
       .filter(col("containment") >= minContainment)
-    // seal the threshold-bounded pair set, release the shingle cache
-    CacheOps.sealAndRelease(out, sh)
   }
 
   /** SimHash near-duplicate pairs: banded-LSH candidate generation
@@ -620,11 +615,12 @@ object Dedup {
     // or the shingle build re-executes per consumer (A/B at sf0.1:
     // 8.7 s recomputed vs 5.9 s persisted, array verification in both)
     val sh = shingleSets(docs, k).persist()
-    // seal the (small) verified-pair set and release the shingle cache
-    // NOW — three consumers are done with it, and a pinned shingle
-    // frame otherwise survives the whole session (r10 bench leak)
-    CacheOps.sealAndRelease(
-      jaccardPrefixFilteredOnShingles(sh, tNum, tDen), sh)
+    // the verified pairs are persisted too: a caller's global sort
+    // (q183) samples its input for the range partitioner, and without
+    // the cache that sample job re-runs the array-intersect
+    // verification the sort's map stage then runs again (A/B at
+    // sf0.1, 4 cores: 4.54 s lazy vs 3.03 s persisted)
+    jaccardPrefixFilteredOnShingles(sh, tNum, tDen).persist()
   }
 
   /** [[jaccardPrefixFiltered]] over a CALLER-persisted shingle frame
@@ -639,8 +635,7 @@ object Dedup {
     // without a persist each side re-executes the whole
     // freq-join+window subtree (AQE plans the two sides as separate
     // query stages — measured r15 at sf0.1: the 260k-row join and the
-    // 27k-row frequency aggregate each ran twice). Persist it;
-    // released once the verified pairs are sealed.
+    // 27k-row frequency aggregate each ran twice). Persist it.
     // Verification carries each doc's FULL sorted shingle array to the
     // candidate pair and intersects ARRAYS map-side — candidates join
     // the |docs|-row array table twice (cheap keyed joins), instead of
@@ -679,7 +674,7 @@ object Dedup {
             (col("a.n") + col("b.n")) * tNum)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val verified = cand
+    cand
       .join(docArrs.select(col("doc_id").as("doc_a"),
         col("arr").as("arr_a"), col("n").as("na")), Seq("doc_a"))
       .join(docArrs.select(col("doc_id").as("doc_b"),
@@ -692,7 +687,6 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast(DoubleType) /
         (col("na") + col("nb") - col("inter")).cast(DoubleType))
       .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
-    CacheOps.sealAndRelease(verified, pref)
   }
 
   /** Per-document derivative-content score: the share of a doc's word

@@ -102,9 +102,7 @@ object Dsir {
     // the occurrence frame feeds BOTH the count table and the scoring
     // pass; without a persist the explode + md5 pipeline runs twice
     // (the q183/q185 diamond lesson — measured 9.7 s → ~3 s at sf0.1).
-    // The per-doc score table is sealed so the cache can be released
-    // on return instead of pinning the exploded bigrams all session.
     val occ = occurrences(docs, idCol, textCol, isTarget).persist()
-    CacheOps.sealAndRelease(scoreRaw(occ, bucketCounts(occ)), occ)
+    scoreRaw(occ, bucketCounts(occ))
   }
 }

@@ -45,15 +45,12 @@ object Itemsets {
       .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
       .agg(count(lit(1)).as("pair_sup"),
         max(col("a.sup")).as("sup_a"), max(col("b.sup")).as("sup_b"))
-    val freqPairs = pairs.crossJoin(broadcast(n1))
+    pairs.crossJoin(broadcast(n1))
       .filter(col("pair_sup") * 100 >= col("n") * minSupportPct)
       .select(col("item_a"), col("item_b"), col("pair_sup"),
         col("sup_a"), col("sup_b"),
         ((col("pair_sup") * col("n")).cast("double") /
           (col("sup_a") * col("sup_b")).cast("double")).as("lift"))
-    // frequent pairs are support-bounded few — seal them and release
-    // the distinct basket-item cache deterministically
-    CacheOps.sealAndRelease(freqPairs, d)
   }
 
   /** Association rules from [[frequentPairs]]: each frequent pair

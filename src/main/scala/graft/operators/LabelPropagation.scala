@@ -67,14 +67,7 @@ object LabelPropagation {
       CacheOps.releaseCheckpoint(labels)
       next
     }
-    // seal the (node, label) table, then release the final round's
-    // checkpoint and the undirected-edge cache that each round
-    // re-joined — nothing re-reads either after the seal
-    CacheOps.sealThen(
-      fin.select(col("node"), col("lbl").as("label"))) {
-      CacheOps.releaseCheckpoint(fin)
-      und.unpersist(false)
-    }
+    fin.select(col("node"), col("lbl").as("label"))
   }
 
   /** The DuckDB mirror of [[run]] as an unrolled CTE chain — ONE

@@ -54,8 +54,6 @@ object TextRank {
             expr(s"($dampingPct * coalesce(s, CAST(0 AS BIGINT))) DIV 100"))
             .as("pr"))
     }
-    // seal the final rank table; the weighted-edge and node caches are
-    // only read by the iterations above
-    CacheOps.sealAndRelease(pr, ew, n)
+    pr
   }
 }

@@ -406,13 +406,11 @@ object AnalyticsOps {
             col("e1.d") === col("e3.s") && col("e2.d") === col("e3.d"))
           .select(col("e1.s").as("a"), col("e1.d").as("b"),
             col("e2.d").as("c"))
-        CacheOps.sealAndRelease(
-          tri.select(col("a").as("node"))
-            .unionAll(tri.select(col("b").as("node")))
-            .unionAll(tri.select(col("c").as("node")))
-            .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-            .orderBy(col("n_triangles").desc, col("node")),
-          und, oriented)
+        tri.select(col("a").as("node"))
+          .unionAll(tri.select(col("b").as("node")))
+          .unionAll(tri.select(col("c").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("n_triangles"))
+          .orderBy(col("n_triangles").desc, col("node"))
       },
       Some("""WITH toks AS (SELECT doc_id,
             generate_subscripts(l, 1) AS pos, unnest(l) AS w
@@ -802,24 +800,17 @@ object AnalyticsOps {
             .localCheckpoint()
           n = frontier.count()
           if (n > 0) levels += frontier
-          // the empty terminal frontier never joins `levels` (the
-          // release list) — drop its registered blocks immediately
+          // the empty terminal frontier never joins `levels` — drop
+          // its registered blocks immediately
           else CacheOps.releaseCheckpoint(frontier)
         }
-        val walk = levels.reduce(_ unionAll _)
-        // seal the |parts|-sized aggregate, then drop every level's
-        // checkpoint blocks — without this, depth× frontier copies
-        // linger in block storage until a GC trough (r10 bench)
-        CacheOps.sealThen(walk
-            .join(parts.select(col("child").as("node"), col("cost")),
-              "node")
-            .groupBy(col("anc").as("part_key"))
-            .agg(count(lit(1)).as("n_nodes"),
-              sum(col("mult") * col("cost")).as("rolled_cost_cents"))
-            .orderBy("part_key")) {
-          levels.foreach(CacheOps.releaseCheckpoint)
-          parts.unpersist(false)
-        }
+        levels.reduce(_ unionAll _)
+          .join(parts.select(col("child").as("node"), col("cost")),
+            "node")
+          .groupBy(col("anc").as("part_key"))
+          .agg(count(lit(1)).as("n_nodes"),
+            sum(col("mult") * col("cost")).as("rolled_cost_cents"))
+          .orderBy("part_key")
       },
       Some("""WITH RECURSIVE e AS (SELECT p_partkey AS child,
             p_partkey // 8 AS parent, 1 + p_partkey % 4 AS qty,
@@ -879,12 +870,9 @@ object AnalyticsOps {
             .localCheckpoint()
           CacheOps.releaseCheckpoint(prev)
         }
-        CacheOps.sealThen(rank
-            .select(col("v").as("cust"), col("r").as("rank_micro"))
-            .orderBy("cust")) {
-          CacheOps.releaseCheckpoint(rank)
-          verts.unpersist(false); edges.unpersist(false)
-        }
+        rank
+          .select(col("v").as("cust"), col("r").as("rank_micro"))
+          .orderBy("cust")
       },
       Some("""WITH mx AS (SELECT max(c_custkey) AS n FROM customer),
         verts AS (SELECT c_custkey AS v FROM customer),

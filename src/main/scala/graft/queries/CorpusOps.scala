@@ -369,14 +369,12 @@ object CorpusOps {
           .withColumn("rq", row_number().over(wq))
           .filter(col("rq") <= 40)
           .drop("rq")
-        graft.operators.CacheOps.sealAndRelease(
-          graft.operators.PrefixSum.exclusiveCumsum(quota, col("doc_id"),
-              col("n_tokens"), "start_offset", bucketSize = 100L)
-            .withColumn("pack_id", expr("start_offset DIV 512"))
-            .select("doc_id", "source", "n_tokens", "start_offset",
-              "pack_id")
-            .orderBy("doc_id"),
-          ded)
+        graft.operators.PrefixSum.exclusiveCumsum(quota, col("doc_id"),
+            col("n_tokens"), "start_offset", bucketSize = 100L)
+          .withColumn("pack_id", expr("start_offset DIV 512"))
+          .select("doc_id", "source", "n_tokens", "start_offset",
+            "pack_id")
+          .orderBy("doc_id")
       },
       Some(s"""WITH w AS (SELECT doc_id, source,
             string_split(text, ' ') AS ws FROM documents),
@@ -870,13 +868,12 @@ object CorpusOps {
           .persist() // 3 GD iterations + the scoring pass read it
         val w = graft.operators.LinearProbe.train(
           feats, ProbeFeats, "y", iterations = 3, lr = 0.1)
-        val scored = graft.operators.LinearProbe
+        graft.operators.LinearProbe
           .score(feats, w.toSeq, ProbeFeats)
           .select(col("doc_id"), col("x1"), col("x2"), col("x3"),
             col("y").as("label"), col("score"),
             (col("score") >= 0.5).as("selected"))
           .orderBy("doc_id")
-        graft.operators.CacheOps.sealAndRelease(scored, feats)
       },
       Some(s"""WITH $ProbeScoredCtes
         SELECT doc_id, x1, x2, x3, label, score,
@@ -904,7 +901,7 @@ object CorpusOps {
           .score(feats, w.toSeq, ProbeFeats)
           .select(col("source"), col("doc_id"),
             abs(col("score") - lit(0.5)).as("u"))
-        val picked = scored.groupBy("source")
+        scored.groupBy("source")
           .agg(graft.expressions.TopKAggregate
             .bottomK(col("u"), col("doc_id"), 5).as("tk"))
           .select(col("source"), posexplode(col("tk")))
@@ -913,7 +910,6 @@ object CorpusOps {
             col("col._2").as("doc_id"),
             col("col._1").as("uncertainty"))
           .orderBy("source", "rk")
-        graft.operators.CacheOps.sealAndRelease(picked, feats)
       },
       Some(s"""WITH $ProbeScoredCtes,
         u AS (SELECT d.source, s.doc_id, abs(s.score - 0.5) AS u

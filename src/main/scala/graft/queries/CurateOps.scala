@@ -197,7 +197,7 @@ object CurateOps {
           .withColumn("o", coalesce(col("o"), lit(0L)))
         val e = col("rtot").cast(DoubleType) *
           col("ctot").cast(DoubleType) / col("n").cast(DoubleType)
-        val out = dense.withColumn("rtot",
+        dense.withColumn("rtot",
             sum("o").over(Window.partitionBy("source")))
           .withColumn("ctot", sum("o").over(Window.partitionBy("split")))
           .withColumn("n", sum("o").over(
@@ -209,7 +209,6 @@ object CurateOps {
           .agg(count(lit(1)).as("n_cells"),
             exactSum(col("cell")).as("chi2_part"))
           .orderBy("source")
-        graft.operators.CacheOps.sealAndRelease(out, obs)
       },
       Some(s"""WITH obs AS (SELECT source, doc_id % 10 AS split,
             CAST(count(*) AS BIGINT) AS o
@@ -603,7 +602,7 @@ object CurateOps {
         // aggregate and the final plan walks it 2^5 times (the LPA
         // plan-doubling lesson). Eagerly checkpoint both ONCE — the
         // corpus is scanned exactly once — then iterate on the tiny
-        // leaves and release the checkpoints after the seal.
+        // leaves.
         val nAll = dirAll
           .join(dirAll.select(col("j").as("i"), col("i").as("j"),
             col("wij").as("wji")), Seq("i", "j"))
@@ -620,7 +619,6 @@ object CurateOps {
         // Checkpointing the |sources|-row iterate per round keeps every
         // round's plan a join of tiny materialized leaves.
         var p = players.select(col("i"), lit(1.0).as("p"))
-        val rounds = scala.collection.mutable.Buffer.empty[DataFrame]
         for (_ <- 1 to 5) {
           val den = nAll
             .join(p.select(col("i"), col("p").as("pi")), Seq("i"))
@@ -634,17 +632,11 @@ object CurateOps {
               (col("wins").cast(DoubleType) / col("den"))
                 .cast(DecimalType(18, 6)).cast(DoubleType).as("p"))
             .localCheckpoint()
-          rounds += p
         }
-        val res = players.join(p, Seq("i"))
+        players.join(p, Seq("i"))
           .select(col("i").as("source"), col("matches"),
             col("wins"), col("p").as("strength"))
           .orderBy("source")
-        graft.operators.CacheOps.sealThen(res) {
-          graft.operators.CacheOps.releaseCheckpoint(nAll)
-          graft.operators.CacheOps.releaseCheckpoint(players)
-          rounds.foreach(graft.operators.CacheOps.releaseCheckpoint)
-        }
       },
       Some {
         val mmRound = (prev: String, next: String) =>

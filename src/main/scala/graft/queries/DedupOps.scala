@@ -293,21 +293,11 @@ object DedupOps {
         val merged = labels1
           .select(col("node").as("u"), col("component").as("v"))
           .union(newEdges)
-        val res = ConnectedComponents.components(merged, "u", "v",
+        ConnectedComponents.components(merged, "u", "v",
             nodes = Some(docs.select(col("doc_id"))))
           .select(col("node").as("doc_id"),
             col("component").as("cluster_id"))
           .orderBy("doc_id")
-        // seal, then drop the shingle cache and BOTH CC runs'
-        // internal final checkpoints. The FIRST run's checkpoint
-        // (labels1) is NOT reachable from res's plan — the second
-        // run's round-1 checkpoint truncated that lineage — so it
-        // must be released explicitly, not via the plan walk.
-        graft.operators.CacheOps.sealThen(res) {
-          graft.operators.CacheOps.releaseCheckpointExcept(res, docs)
-          graft.operators.CacheOps.releaseCheckpoint(labels1)
-          shAll.unpersist(false)
-        }
       },
       Some(FullBatchClusterOracle)),
 
@@ -592,12 +582,10 @@ object DedupOps {
               .as("ssq"))
         val D = org.apache.spark.sql.types.DoubleType
         val mu = col("ssum").cast(D) / (col("m") * 2).cast(D)
-        graft.operators.CacheOps.sealAndRelease(
-          m.select(col("m"), col("sxy"), col("ssum"), col("ssq"),
-            ((col("sxy").cast(D) / col("m").cast(D) - mu * mu) /
-              (col("ssq").cast(D) / (col("m") * 2).cast(D) - mu * mu))
-              .as("assortativity")),
-          pairs)
+        m.select(col("m"), col("sxy"), col("ssum"), col("ssq"),
+          ((col("sxy").cast(D) / col("m").cast(D) - mu * mu) /
+            (col("ssq").cast(D) / (col("m") * 2).cast(D) - mu * mu))
+            .as("assortativity"))
       },
       Some(s"""WITH $shingleCte,
         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -849,7 +837,7 @@ object DedupOps {
         // read it (the winnowing HOF chain is too expensive to
         // recompute for a diamond)
         val keep = Dedup.capDocFreq(docFp, MaxDocFreq, "fp").persist()
-        val out = keep.select(col("doc_id").as("doc_a"), col("fp"))
+        keep.select(col("doc_id").as("doc_a"), col("fp"))
           .join(keep.select(col("doc_id").as("doc_b"), col("fp")),
             Seq("fp"))
           .filter(col("doc_a") < col("doc_b"))
@@ -857,7 +845,6 @@ object DedupOps {
           .agg(count(lit(1)).as("n_shared"))
           .filter(col("n_shared") >= 2)
           .orderBy("doc_a", "doc_b")
-        graft.operators.CacheOps.sealAndRelease(out, keep)
       },
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws,
             len(string_split(text, ' ')) AS n FROM documents),
@@ -888,7 +875,7 @@ object DedupOps {
     // apart and systematically underestimate. Fingerprint =
     // md5(sorted distinct words): bag-of-words identity, the
     // template-page near-dup class. One aggregate builds the group
-    // table; both censuses read it (persisted, released at the seal).
+    // table; both censuses read it (persisted).
     Q("q292_sampled_dup_rate",
       (s, dir) => {
         val fp = md5(concat_ws(" ",
@@ -902,7 +889,7 @@ object DedupOps {
         val samp = g.filter(substring(col("fp"), 1, 2) < "29")
           .agg(sum("c").as("n_sample_docs"),
             sum(col("c") - 1).as("sample_dups"))
-        val out = full.crossJoin(broadcast(samp))
+        full.crossJoin(broadcast(samp))
           .select(col("n_docs"),
             (col("dups").cast(DoubleType) /
               col("n_docs").cast(DoubleType)).as("full_dup_rate"),
@@ -910,7 +897,6 @@ object DedupOps {
             (col("sample_dups").cast(DoubleType) /
               col("n_sample_docs").cast(DoubleType))
               .as("sample_dup_rate"))
-        graft.operators.CacheOps.sealAndRelease(out, g)
       },
       Some("""WITH f AS (SELECT doc_id,
             md5(array_to_string(list_sort(list_distinct(

@@ -512,18 +512,16 @@ object EnergyOps {
               abs(col("cur.total") - col("prev.total")).as("abs_err"))
             .groupBy("event_type")
             .agg(count(lit(1)).as("n"), sum(col("abs_err")).as("sae"))
-        graft.operators.CacheOps.sealAndRelease(
-          lagJoin(24).as("d").join(lagJoin(1).as("h"), Seq("event_type"))
-            .select(col("event_type"),
-              col("d.n").as("n_24h"),
-              (col("d.sae").cast(DoubleType) /
-                col("d.n").cast(DoubleType)).as("mae_24h"),
-              col("h.n").as("n_1h"),
-              (col("h.sae").cast(DoubleType) /
-                col("h.n").cast(DoubleType)).as("mae_1h"))
-            .withColumn("skill_ratio", col("mae_24h") / col("mae_1h"))
-            .orderBy("event_type"),
-          hourly)
+        lagJoin(24).as("d").join(lagJoin(1).as("h"), Seq("event_type"))
+          .select(col("event_type"),
+            col("d.n").as("n_24h"),
+            (col("d.sae").cast(DoubleType) /
+              col("d.n").cast(DoubleType)).as("mae_24h"),
+            col("h.n").as("n_1h"),
+            (col("h.sae").cast(DoubleType) /
+              col("h.n").cast(DoubleType)).as("mae_1h"))
+          .withColumn("skill_ratio", col("mae_24h") / col("mae_1h"))
+          .orderBy("event_type")
       },
       Some("""WITH hourly AS (SELECT event_type,
             date_trunc('hour', ts) AS bucket,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DoubleType
 import graft.Tables
 import graft.expressions.TopKAggregate
 import graft.functions.TextFuncs
-import graft.operators.{CacheOps, Dedup}
+import graft.operators.Dedup
 
 /** Round-8 operators: weighted sampling, pipeline self-evaluation and
   * table maintenance — the layer that tells you whether the dedup /
@@ -182,18 +182,16 @@ object EvalOps {
         val cand = Dedup.minHashLshOnShingles(sh, DedupOps.NumHashes,
             DedupOps.Bands, maxBucketWidth = DedupOps.MaxBucketWidth)
           .select(col("doc_a"), col("doc_b"), lit(1).as("c"))
-        CacheOps.sealAndRelease(
-          truth.join(cand, Seq("doc_a", "doc_b"), "full")
-            .agg(count(col("t")).as("n_true"),
-              count(col("c")).as("n_cand"),
-              count(when(col("t").isNotNull &&
-                col("c").isNotNull, 1)).as("n_hit"))
-            .select(col("n_true"), col("n_cand"), col("n_hit"),
-              (col("n_hit").cast(DoubleType) /
-                col("n_true").cast(DoubleType)).as("recall"),
-              (col("n_hit").cast(DoubleType) /
-                col("n_cand").cast(DoubleType)).as("precision")),
-          sh)
+        truth.join(cand, Seq("doc_a", "doc_b"), "full")
+          .agg(count(col("t")).as("n_true"),
+            count(col("c")).as("n_cand"),
+            count(when(col("t").isNotNull &&
+              col("c").isNotNull, 1)).as("n_hit"))
+          .select(col("n_true"), col("n_cand"), col("n_hit"),
+            (col("n_hit").cast(DoubleType) /
+              col("n_true").cast(DoubleType)).as("recall"),
+            (col("n_hit").cast(DoubleType) /
+              col("n_cand").cast(DoubleType)).as("precision"))
       },
       Some(s"""WITH ${DedupOps.lshCandidateCtes("documents")},
           sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -402,18 +400,16 @@ object EvalOps {
         val bySource = joint.groupBy("source").agg(sum("nxy").as("nx"))
         val byLang = joint.groupBy("lang").agg(sum("nxy").as("ny"))
         val total = joint.agg(sum("nxy").as("n"))
-        CacheOps.sealAndRelease(
-          joint.join(broadcast(bySource), "source")
-            .join(broadcast(byLang), "lang")
-            .crossJoin(broadcast(total))
-            .select(col("source"), col("lang"), col("nxy"), col("nx"),
-              col("ny"),
-              ((col("nxy") * col("n")).cast(DoubleType) /
-                (col("nx") * col("ny")).cast(DoubleType)).as("lift"),
-              (col("nxy") * col("n") > col("nx") * col("ny"))
-                .as("over_represented"))
-            .orderBy("source", "lang"),
-          joint)
+        joint.join(broadcast(bySource), "source")
+          .join(broadcast(byLang), "lang")
+          .crossJoin(broadcast(total))
+          .select(col("source"), col("lang"), col("nxy"), col("nx"),
+            col("ny"),
+            ((col("nxy") * col("n")).cast(DoubleType) /
+              (col("nx") * col("ny")).cast(DoubleType)).as("lift"),
+            (col("nxy") * col("n") > col("nx") * col("ny"))
+              .as("over_represented"))
+          .orderBy("source", "lang")
       },
       Some("""WITH j AS (SELECT source, lang, count(*) AS nxy
           FROM documents GROUP BY 1, 2),

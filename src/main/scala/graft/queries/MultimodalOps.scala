@@ -354,13 +354,11 @@ object MultimodalOps {
           nodes = Some(hashes.select(col("media_id"))))
         val sizes = cc.groupBy("component")
           .agg(count(lit(1)).as("cluster_size"))
-        graft.operators.CacheOps.sealAndRelease(
-          cc.join(sizes, "component")
-            .select(col("node").as("media_id"),
-              col("component").as("cluster_id"), col("cluster_size"),
-              (col("node") === col("component")).as("is_canonical"))
-            .orderBy("media_id"),
-          hashes)
+        cc.join(sizes, "component")
+          .select(col("node").as("media_id"),
+            col("component").as("cluster_id"), col("cluster_size"),
+            (col("node") === col("component")).as("is_canonical"))
+          .orderBy("media_id")
       },
       Some("""WITH RECURSIVE g AS (SELECT doc_id,
             CASE WHEN doc_id % 3 = 0 THEN 16 ELSE 8 END AS w,

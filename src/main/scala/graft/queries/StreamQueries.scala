@@ -820,10 +820,8 @@ object StreamQueries {
         }
         val occ = graft.operators.Dsir.occurrences(docs, "doc_id",
           "text", col("lang") === "en").persist()
-        graft.operators.CacheOps.sealAndRelease(
-          graft.operators.Dsir.scoreRaw(occ, s.table("q236_sink"))
-            .orderBy("doc_id"),
-          occ)
+        graft.operators.Dsir.scoreRaw(occ, s.table("q236_sink"))
+          .orderBy("doc_id")
       },
       Some(CorpusOps.DsirOracle)),
 

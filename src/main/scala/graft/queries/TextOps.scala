@@ -220,13 +220,11 @@ object TextOps {
             maxBucketWidth = 1 << 20)
           .filter(col("est_jaccard") >= 0.75)
           .select(col("doc_b").as("doc_id")).distinct()
-        graft.operators.CacheOps.sealAndRelease(
-          keepers.join(nearDupLosers, Seq("doc_id"), "left_anti")
-            .groupBy("lang")
-            .agg(count(lit(1)).as("n_docs"),
-              sum(col("n_tokens")).as("total_tokens"))
-            .orderBy("lang"),
-          keepers)
+        keepers.join(nearDupLosers, Seq("doc_id"), "left_anti")
+          .groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("n_tokens")).as("total_tokens"))
+          .orderBy("lang")
       },
       Some {
         val stopList = stopwords.map(w => s"'$w'").mkString(", ")

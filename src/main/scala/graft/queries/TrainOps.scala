@@ -226,12 +226,12 @@ object TrainOps {
       (s, dir) => {
         // both the train-distinct side and the held-out audit side
         // consume the gram table — persist the diamond (deserialized
-        // columnar, spills to disk at scale) and release on seal
+        // columnar, spills to disk at scale)
         val grams = docGrams(Tables.load(s, dir, "documents"))
           .persist()
         val train = grams.filter(col("doc_id") % 10 < 8)
           .select("gram").distinct().withColumn("seen", lit(1))
-        val res = grams.filter(col("doc_id") % 10 >= 8)
+        grams.filter(col("doc_id") % 10 >= 8)
           .join(train, Seq("gram"), "left")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_grams"),
@@ -241,7 +241,6 @@ object TrainOps {
             col("n_novel").cast(DoubleType) /
               col("n_grams").cast(DoubleType))
           .orderBy("doc_id")
-        graft.operators.CacheOps.sealAndRelease(res, grams)
       },
       Some(NoveltyOracle)),
 
@@ -561,8 +560,7 @@ object TrainOps {
     // source, checkpointed); all 3 rounds iterate on that leaf with
     // |sources|-row weight frames riding broadcasts — 100 TB pays a
     // single scan. Plan-doubling hygiene per the q268/LPA lesson:
-    // every round's weight frame is eagerly checkpointed, releases
-    // ride the seal.
+    // every round's weight frame is eagerly checkpointed.
     Q("q283_doremi_mix",
       (s, dir) => {
         val tf = Tables.load(s, dir, "documents")
@@ -582,8 +580,6 @@ object TrainOps {
           .select(col("source"),
             (lit(1.0) / col("k").cast(DoubleType)).as("w"))
           .localCheckpoint()
-        val spent = scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.DataFrame](w)
         var lastKl: org.apache.spark.sql.DataFrame = null
         for (_ <- 1 to 3) {
           val mix = p.join(broadcast(w), Seq("source"))
@@ -604,12 +600,10 @@ object TrainOps {
               (col("wr") / col("twr")).cast(DecimalType(18, 6))
                 .cast(DoubleType).as("w"))
             .localCheckpoint()
-          spent += kl
-          spent += w
           lastKl = kl
         }
         val stot = st.agg(sum("st").as("tot"))
-        val out = st.crossJoin(broadcast(stot))
+        st.crossJoin(broadcast(stot))
           .select(col("source"),
             (col("st").cast(DoubleType) / col("tot").cast(DoubleType))
               .as("token_share"))
@@ -618,11 +612,6 @@ object TrainOps {
           .select(col("source"), col("token_share"),
             col("w").as("weight"), col("kl").as("excess_kl"))
           .orderBy("source")
-        graft.operators.CacheOps.sealThen(out) {
-          tf.unpersist(false)
-          (spent :+ p).foreach(
-            graft.operators.CacheOps.releaseCheckpoint)
-        }
       },
       Some {
         val round = (prev: String, t: Int) => s"""

@@ -318,26 +318,22 @@ object VectorOps {
     Q("q107_semantic_dedup",
       (s, dir) => {
         val emb = Tables.load(s, dir, "embeddings")
-        // consumed twice (pair scoping + the survivor report): persist
-        // the assignment or the ENTIRE iterative fit re-executes per
-        // consumer
+        // consumed twice (pair scoping + the survivor report) — off
+        // fitAssign's persisted result, so the iterative fit runs once
         val assign = KMeans.fitAssign(emb, k = 8, iters = 2)
           .select(col("vec_id"), col("cluster"))
-          .cache()
         val scoped = emb.join(assign, "vec_id")
           .select(col("cluster"), col("vec_id"), col("embedding"))
         val dropped = Similarity
           .cosinePairsAboveWithin(scoped, "cluster", 0.35)
           .select(col("id_b").as("vec_id")).distinct()
           .withColumn("is_dropped", lit(1L))
-        graft.operators.CacheOps.sealAndRelease(
-          assign.join(dropped, Seq("vec_id"), "left")
-            .groupBy("cluster")
-            .agg(count(lit(1)).as("n_vectors"),
-              count(col("is_dropped")).as("n_dropped"),
-              (count(lit(1)) - count(col("is_dropped"))).as("n_kept"))
-            .orderBy("cluster"),
-          assign)
+        assign.join(dropped, Seq("vec_id"), "left")
+          .groupBy("cluster")
+          .agg(count(lit(1)).as("n_vectors"),
+            count(col("is_dropped")).as("n_dropped"),
+            (count(lit(1)) - count(col("is_dropped"))).as("n_kept"))
+          .orderBy("cluster")
       },
       Some(s"""WITH $exCte,
         $kmeansCtes,
@@ -766,15 +762,13 @@ object VectorOps {
           .join(trunc.filter(col("t_rank") === 1L)
             .select(col("query_id"), col("t_cand").as("trunc_top1")),
             "query_id")
-        graft.operators.CacheOps.sealAndRelease(
-          top1.join(overlap, Seq("query_id"), "left")
-            .select(col("query_id"),
-              (coalesce(col("n_overlap"), lit(0L)).cast("double") / 5.0)
-                .as("recall_at_5"),
-              (col("full_top1") === col("trunc_top1")).as("top1_match"),
-              col("full_top1"), col("trunc_top1"))
-            .orderBy("query_id"),
-          full, trunc)
+        top1.join(overlap, Seq("query_id"), "left")
+          .select(col("query_id"),
+            (coalesce(col("n_overlap"), lit(0L)).cast("double") / 5.0)
+              .as("recall_at_5"),
+            (col("full_top1") === col("trunc_top1")).as("top1_match"),
+            col("full_top1"), col("trunc_top1"))
+          .orderBy("query_id")
       },
       Some(s"""WITH $exCte,
         fdots AS (SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
@@ -872,12 +866,10 @@ object VectorOps {
           .select(col("e1.a").as("vec_id"), col("e2.b").as("w"))
           .distinct()
           .groupBy("vec_id").agg(count(lit(1)).as("exact_ball2"))
-        graft.operators.CacheOps.sealAndRelease(
-          exact.join(est, "vec_id")
-            .select(col("vec_id"), col("exact_ball2"), col("n_regs"),
-              col("hll_estimate"))
-            .orderBy("vec_id"),
-          symSelf)
+        exact.join(est, "vec_id")
+          .select(col("vec_id"), col("exact_ball2"), col("n_regs"),
+            col("hll_estimate"))
+          .orderBy("vec_id")
       },
       Some(s"""WITH $exCte,
         dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -960,20 +952,18 @@ object VectorOps {
               exact("cand_id") === pq("p_cand"))
           .groupBy(exact("query_id").as("query_id"))
           .agg(count(lit(1)).as("n_overlap"))
-        graft.operators.CacheOps.sealAndRelease(
-          exact.filter(col("rank") === 1)
-            .select(col("query_id"), col("cand_id").as("exact_top1"))
-            .join(pq.filter(col("p_rank") === 1L)
-              .select(col("query_id"), col("p_cand").as("pq_top1")),
-              "query_id")
-            .join(overlap, Seq("query_id"), "left")
-            .select(col("query_id"),
-              (coalesce(col("n_overlap"), lit(0L)).cast("double") / 5.0)
-                .as("recall_at_5"),
-              (col("exact_top1") === col("pq_top1")).as("top1_match"),
-              col("exact_top1"), col("pq_top1"))
-            .orderBy("query_id"),
-          exact, pq)
+        exact.filter(col("rank") === 1)
+          .select(col("query_id"), col("cand_id").as("exact_top1"))
+          .join(pq.filter(col("p_rank") === 1L)
+            .select(col("query_id"), col("p_cand").as("pq_top1")),
+            "query_id")
+          .join(overlap, Seq("query_id"), "left")
+          .select(col("query_id"),
+            (coalesce(col("n_overlap"), lit(0L)).cast("double") / 5.0)
+              .as("recall_at_5"),
+            (col("exact_top1") === col("pq_top1")).as("top1_match"),
+            col("exact_top1"), col("pq_top1"))
+          .orderBy("query_id")
       },
       Some(s"""WITH ex AS (
           SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
@@ -1047,7 +1037,7 @@ object VectorOps {
         val edges = Similarity.cosinePairsAbove(emb, 0.35)
           .select(col("id_a"), col("id_b"))
         val assign = KMeans.fitAssign(emb, k = 8, iters = 2)
-          .select(col("vec_id"), col("cluster")).cache()
+          .select(col("vec_id"), col("cluster"))
         val lab = edges
           .join(assign.select(col("vec_id").as("id_a"),
             col("cluster").as("ca")), "id_a")
@@ -1068,20 +1058,18 @@ object VectorOps {
         val members = assign.groupBy("cluster")
           .agg(count(lit(1)).as("n_members"))
         val total = stats.agg(sum("volume").as("total_vol"))
-        graft.operators.CacheOps.sealAndRelease(
-          members.join(stats, Seq("cluster"), "left")
-            .na.fill(0L, Seq("volume", "cut_edges"))
-            .crossJoin(broadcast(total))
-            .select(col("cluster"), col("n_members"), col("volume"),
-              col("cut_edges"),
-              when(least(col("volume"),
-                  col("total_vol") - col("volume")) === 0L, lit(0.0))
-                .otherwise(col("cut_edges").cast(DoubleType) /
-                  least(col("volume"), col("total_vol") - col("volume"))
-                    .cast(DoubleType))
-                .as("conductance"))
-            .orderBy("cluster"),
-          assign, stats)
+        members.join(stats, Seq("cluster"), "left")
+          .na.fill(0L, Seq("volume", "cut_edges"))
+          .crossJoin(broadcast(total))
+          .select(col("cluster"), col("n_members"), col("volume"),
+            col("cut_edges"),
+            when(least(col("volume"),
+                col("total_vol") - col("volume")) === 0L, lit(0.0))
+              .otherwise(col("cut_edges").cast(DoubleType) /
+                least(col("volume"), col("total_vol") - col("volume"))
+                  .cast(DoubleType))
+              .as("conductance"))
+          .orderBy("cluster")
       },
       Some(s"""WITH $exCte,
         $kmeansCtes,

@@ -236,7 +236,7 @@ object WebOps {
         val ctot = ctf.agg(sum("cc").as("ct"))
         val p = col("c").cast(DoubleType) / col("st").cast(DoubleType)
         val q = col("cc").cast(DoubleType) / col("ct").cast(DoubleType)
-        val out = tf.join(ctf, Seq("tok"))
+        tf.join(ctf, Seq("tok"))
           .join(broadcast(stot), Seq("source"))
           .crossJoin(broadcast(ctot))
           .withColumn("contrib", p * lnq(p / q))
@@ -244,7 +244,6 @@ object WebOps {
           .agg(count(lit(1)).as("n_types"),
             exactSum(col("contrib")).as("kl"))
           .orderBy("source")
-        graft.operators.CacheOps.sealAndRelease(out, tf)
       },
       Some(s"""WITH tf AS (SELECT source, t.tok AS tok,
             CAST(count(*) AS BIGINT) AS c

@@ -1,16 +1,20 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-import graft.operators.{CacheOps, Dbscan, LabelPropagation}
+import graft.operators.{BpeTrain, CacheOps, Dbscan, Dedup, Itemsets,
+  KMeans, LabelPropagation, TextRank}
 
-/** The unpersist-hygiene contract (CacheOps): operators that persist
-  * or localCheckpoint intermediates must release them before
-  * returning, so a long-lived session running hundreds of queries
-  * (the driver's bench harness) never accumulates block storage.
-  * The round-9/10 bench showed contiguous query stretches running
-  * 4-5x slower than in isolation precisely because orphaned
-  * checkpoint blocks piled up until a GC trough. */
+/** The cache-release contract (CacheOps): operators return LAZY
+  * results with their intermediate caches in place, the caller's
+  * `sweep` releases them, and iteration loops release superseded
+  * rounds as they go — so what a query leaves behind is bounded by
+  * its shape, never by its round count, and a sweep between queries
+  * (the driver's bench harness) leaves nothing. The round-9/10 bench
+  * showed contiguous query stretches running 4-5x slower than in
+  * isolation precisely because orphaned checkpoint blocks piled up
+  * until a GC trough. */
 class CacheOpsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -18,112 +22,99 @@ class CacheOpsSpec extends SparkSpec {
   private def storedRdds(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Sealing is opt-in (Verify/Bench pass `GraftSession.Sealed`); the
-    * tests that exercise the seal/release machinery turn it on the
-    * same way, restoring the session's prior state after. */
-  private def withSealing[A](body: => A): A =
-    withConf(GraftSession.Sealed.toSeq: _*)(body)
-
-  test("default session: sealThen returns the LAZY frame and keeps " +
-      "caches — library callers never pay an eager materialization") {
+  /** Persistent RDDs left once `run(rounds)` has been counted,
+    * sweeping first. SparkContext tracks persisted RDDs weakly: an
+    * unreleased checkpoint that nothing references leaves the map
+    * whenever a GC happens to collect it. A poller therefore holds
+    * every persisted RDD it sees until the count is taken, so only an
+    * explicit release lowers the count, however the GC is timed. */
+  private def retained(run: Int => DataFrame, rounds: Int): Int = {
     CacheOps.sweep(spark)
-    assert(spark.conf.getOption(CacheOps.SealKey).isEmpty ||
-      !CacheOps.sealingEnabled(spark),
-      "suite session unexpectedly has sealing forced on")
-    val cached = (1 to 100).toDF("x").persist()
-    cached.count()
-    var released = false
-    val out = CacheOps.sealThen(cached.agg(sum($"x").as("s"))) {
-      released = true
-    }
-    // a corpus-sized operator result must come back lazy in a default
-    // session: no LogicalRDD leaf (= no eager localCheckpoint ran),
-    // and the release block did NOT run (only safe after a seal)
-    import org.apache.spark.sql.execution.LogicalRDD
-    val sealedLeaf = out.queryExecution.analyzed.collectFirst {
-      case lr: LogicalRDD => lr
-    }
-    assert(sealedLeaf.isEmpty, "default session eagerly sealed the result")
-    assert(!released, "release actions ran without a seal pinning the data")
-    assert(storedRdds().nonEmpty, "input cache was dropped without a seal")
-    assert(out.as[Long].head() === 5050L)
-    cached.unpersist(true)
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val polling = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (polling.get()) {
+      spark.sparkContext.getPersistentRDDs.values.foreach(held.add)
+      Thread.sleep(1)
+    })
+    poller.start()
+    try {
+      assert(run(rounds).count() >= 0L)
+      storedRdds().size
+    } finally { polling.set(false); poller.join() }
   }
 
-  test("sealAndRelease materializes the result and unpersists caches") {
-   withSealing {
-    CacheOps.sweep(spark)
-    val cached = (1 to 100).toDF("x").persist()
-    cached.count()
-    assert(storedRdds().nonEmpty)
-    val pinned = CacheOps.sealAndRelease(
-      cached.agg(sum($"x").as("s")), cached)
-    // the cache is gone, but the sealed result still answers (its
-    // checkpoint blocks hold the data, not the released cache)
-    assert(pinned.as[Long].head() === 5050L)
-    val left = storedRdds()
-    // only the sealed result's own checkpoint remains
-    CacheOps.releaseCheckpoint(pinned)
-    assert(storedRdds().isEmpty && left.size <= 1)
-   }
-  }
-
-  test("releaseCheckpointExcept keeps the protected frame's blocks") {
-    CacheOps.sweep(spark)
-    val keep = (1 to 10).toDF("a").localCheckpoint(true)
-    val derived = keep.withColumn("b", $"a" * 2).localCheckpoint(true)
-    CacheOps.releaseCheckpointExcept(derived, keep)
-    // derived's own blocks are gone; keep's survive and still answer
-    assert(keep.count() === 10L)
-    CacheOps.releaseCheckpoint(keep)
-  }
-
-  test("representative operators leave NO block storage behind") {
-   withSealing {
-    CacheOps.sweep(spark)
-    // LabelPropagation persists the undirected adjacency per round;
-    // Dbscan persists four intermediates and runs CC (which
-    // localCheckpoints every round) — both previously leaked.
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("s", "d")
+  test("loop operators: round-independent RDD count, sweep leaves none") {
+    val edges = (1L until 12L).map(i => (i, i + 1)).toDF("s", "d")
     val nodes = (1L to 12L).toDF("id")
-    val lpa = LabelPropagation.run(edges, "s", "d", nodes, "id", 3)
-    assert(lpa.count() === 12L)
-    CacheOps.releaseCheckpoint(lpa)
-    assert(storedRdds().isEmpty,
-      s"LabelPropagation leaked RDDs: ${storedRdds()}")
-
-    val pts = Seq((1L, 0L, 0L), (2L, 1L, 0L), (3L, 0L, 1L),
-      (4L, 100L, 100L)).toDF("id", "x", "y")
-    val db = Dbscan.run(pts, "id", "x", "y", eps = 3L, minPts = 2)
-    assert(db.count() === 4L)
-    CacheOps.releaseCheckpoint(db)
-    assert(storedRdds().isEmpty,
-      s"Dbscan leaked RDDs: ${storedRdds()}")
-   }
+    val lpa = (r: Int) =>
+      LabelPropagation.run(edges, "s", "d", nodes, "id", r)
+    // a chain of ε-spaced points, one grid cell each: CC over a
+    // longer path takes more rounds
+    val chain = (n: Int) => Dbscan.run(
+      (0 until n).map(i => (i.toLong, 3L * i, 0L)).toDF("id", "x", "y"),
+      "id", "x", "y", eps = 3L, minPts = 2)
+    val docs = Seq((0L, "abcdefghijkl mnopqrstuvwx"), (1L, "abcdef"))
+      .toDF("doc_id", "text")
+    val bpe = (r: Int) => BpeTrain.train(docs, "text", r).toDF()
+    // (operator, run at a size, size: rounds, or points on the chain)
+    Seq(("LabelPropagation", lpa, 2), ("Dbscan", chain, 4),
+        ("BpeTrain", bpe, 2)).foreach { case (name, run, n) =>
+      val short = retained(run, n)
+      val long = retained(run, 4 * n)
+      assert(short === long,
+        s"$name retained $short RDDs at size $n but $long at ${4 * n}")
+      CacheOps.sweep(spark)
+      assert(storedRdds().isEmpty, s"$name: sweep left ${storedRdds()}")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name: sweep left CacheManager entries")
+    }
   }
 
-  test("registry heavy-operator sweep: no query leaves more block " +
-      "storage than its own sealed result") {
-   withSealing {
-    // Regression guard for the round-9/10 bench mechanism: any future
-    // operator that persists without releasing, or checkpoints
-    // per-round without bounding retention, fails here — long before
-    // a 250-query driver run exposes it as a positional slowdown.
+  test("registry heavy queries: a sweep leaves no block storage behind") {
+    // The bench harness sweeps between queries: whatever a heavy
+    // query persists or checkpoints must be released by that sweep,
+    // and the next run must not depend on anything the sweep dropped.
     val heavy = Seq("q70_dup_clusters", "q208_label_propagation",
       "q225_pagerank", "q228_bpe_train", "q229_dsir_selection",
       "q235_dbscan", "q237_frequent_pairs", "q94_containment")
     heavy.foreach { q =>
+      def run(): Long = graft.queries.Registry.queries(q)(spark, sf).count()
       CacheOps.sweep(spark)
-      val df = graft.queries.Registry.queries(q)(spark, sf)
-      assert(df.count() >= 0)
-      val left = storedRdds()
-      assert(left.size <= 2,
-        s"$q left ${left.size} RDDs in block storage: $left " +
-          "(only its own sealed result is allowed)")
+      val first = run()
+      CacheOps.sweep(spark)
+      assert(storedRdds().isEmpty, s"$q: sweep left ${storedRdds()}")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$q: sweep left CacheManager entries")
+      assert(run() === first, s"$q: a rerun after the sweep differs")
     }
     CacheOps.sweep(spark)
-    assert(storedRdds().isEmpty)
-   }
+  }
+
+  test("operator results are lazy: no localCheckpoint leaf in the " +
+      "returned plan") {
+    CacheOps.sweep(spark)
+    def leaves(df: DataFrame): Seq[Int] =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+    val emb = (0 until 8).map(i => (i.toLong, Array(i.toFloat, 1f)))
+      .toDF("vec_id", "embedding")
+    val docs = Seq((0L, "a b c d e f"), (1L, "a b c d e g"),
+      (2L, "x y z w v u")).toDF("doc_id", "text")
+    val baskets = Seq((0L, "x"), (0L, "y"), (1L, "x"), (1L, "y"))
+      .toDF("bid", "item")
+    val edges = Seq(("a", "z", 1L), ("b", "z", 1L)).toDF("src", "dst", "c")
+    val nodes = Seq("a", "b", "z").toDF("node")
+    Seq(
+      "KMeans.fitAssign" -> KMeans.fitAssign(emb, k = 2, iters = 2),
+      "Dedup.jaccardPrefixFiltered" ->
+        Dedup.jaccardPrefixFiltered(docs, 3, 1, 2),
+      "Itemsets.frequentPairs" ->
+        Itemsets.frequentPairs(baskets, "bid", "item", 50),
+      "TextRank.pageRank" -> TextRank.pageRank(edges, nodes, 2)
+    ).foreach { case (name, df) =>
+      assert(leaves(df).isEmpty, s"$name returned a checkpointed plan")
+      assert(df.count() > 0L, name)
+    }
+    CacheOps.sweep(spark)
   }
 
   test("sweep drops catalog caches AND orphaned checkpoint blocks") {

@@ -1,10 +1,10 @@
 package graft
 
 /** The A/B rig: same-JVM alternating A/B over an arbitrary session
-  * conf (e.g. `spark.graft.seal.enabled`, any `spark.sql.*` runtime
+  * conf (e.g. `spark.sql.adaptive.enabled`, any `spark.sql.*` runtime
   * conf). Runs each named query `reps`× with the conf at <aValue> and
   * at <bValue>, interleaved after one warm-up per arm, and prints
-  * per-arm medians. The session is [[GraftSession]]'s sealed one — the
+  * per-arm medians. The session is [[GraftSession.local]]'s — the
   * configuration Bench measures.
   *
   * `sbt "Test/runMain graft.ConfAB <dir> <q,[q...]> <confKey> <aValue> <bValue> [reps]"`
@@ -17,7 +17,7 @@ object ConfAB {
     val aVal = args(3)
     val bVal = args(4)
     val reps = if (args.length > 5) args(5).toInt else 3
-    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    val spark = GraftSession.local()
 
     def once(name: String): Double = {
       graft.operators.CacheOps.sweep(spark, blocking = true)

@@ -8,8 +8,6 @@ package graft
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // unsealed: audit the real upstream plans, not the sealed
-    // `Scan ExistingRDD`
     val spark = GraftSession.local(4)
     val qs = Seq("q113_fuzzy_block_join", "q114_kmv_distinct",
       "q115_stratified_sample", "q116_ewma", "q117_winsorize",

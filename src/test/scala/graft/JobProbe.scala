@@ -19,7 +19,7 @@ object JobProbe {
     val names = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq("q70_dup_clusters"))
-    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    val spark = GraftSession.local()
 
     case class J(id: Int, start: Long, var end: Long = 0L,
       var tasks: Int = 0, var stages: Int = 0)

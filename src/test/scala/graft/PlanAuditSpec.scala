@@ -28,7 +28,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q306_cell_conductance hand-count: 5 distinct BNLJ kernels, " +
       "not the 23 the text grep reported") {
-    try withConf(graft.operators.CacheOps.SealKey -> "false") {
+    try {
       val df = graft.queries.Registry.queries("q306_cell_conductance")(
         spark, sf)
       val c = PlanAudit.audit(df)

@@ -24,7 +24,7 @@ object PlanDump {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).toSeq
     val out = args.lift(2).map(d => (d, args(3)))
-    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    val spark = GraftSession.local()
     out.foreach(o =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(o._1)))
 

@@ -22,7 +22,7 @@ object ScaleProof {
     // re-measuring a single fixed operator without the full sweep
     val onlyNames = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSet)
-    val spark = GraftSession.local(overrides = GraftSession.Sealed)
+    val spark = GraftSession.local()
 
     val shufRead = new LongAdder
     val shufWrite = new LongAdder

